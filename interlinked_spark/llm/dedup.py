@@ -27,20 +27,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators.aggregates import dedup_exact
 from ..operators.checkpointing import materialize
+from ..operators.diagnostics import drop_hot_buckets
+from ..operators.partitioning import spread
 
 
 def _normalized(col: str) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
-
-
-def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Fan-out stage parallelism — shared engine-wide helper (see
-    ``operators/partitioning.spread``; this module measured the pattern
-    first: a single small parquet file -> 1 partition -> 1 core does
-    all the shingling)."""
-    from ..operators.partitioning import spread
-
-    return spread(df, min_partitions)
 
 
 def exact_text_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -88,25 +80,8 @@ def _with_shingles(
     base = df.filter(F.size(F.split(_normalized(text_col), " ")) >= n).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("__text")
     )
-    base = _spread(base)
+    base = spread(base)
     return base.select("id", shingle_udf("__text").alias(out))
-
-
-def _shingles(text_col: str, n: int) -> F.Column:
-    """Shingle column expression (kept for ad-hoc use; prefer
-    :func:`_with_shingles`, which evaluates the tokenizer once/row)."""
-    toks = F.split(_normalized(text_col), " ")
-    return F.array_distinct(
-        F.filter(
-            F.transform(
-                toks,
-                lambda _, i: F.when(
-                    i + n <= F.size(toks), F.array_join(F.slice(toks, i + 1, n), " ")
-                ),
-            ),
-            lambda x: x.isNotNull(),
-        )
-    )
 
 
 def minhash_signature_bands(
@@ -185,13 +160,13 @@ def minhash_signature_bands(
         F.size(F.split(_normalized(text_col), " ")) >= shingle_n
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     sig = (
-        _spread(base)
+        spread(base)
         .select("id", shingle_sig_udf("__text").alias("__ss"))
         .select("id", F.col("__ss.sh").alias("sh"), F.col("__ss.sig").alias("sig"))
     )
     # Materialize the Arrow pipeline ONCE; the band explode, both sides
     # of the bucket self-join, and both shingle join-backs below all
-    # derive from this checkpoint (see ngram_jaccard_pairs note).
+    # derive from this checkpoint (see _posting_pair_counts note).
     sig = materialize(sig, checkpoint_mode)
     # Band key = hash of the band's signature slice.  Explode ids ONLY:
     # the (band, bucket) shuffle and the bucket self-join move 3 longs
@@ -252,8 +227,6 @@ def minhash_near_dup_pairs(
         # first so identical-doc cliques never reach this stage, and
         # size the cap from ``minhash_signature_bands`` +
         # ``diagnostics.bucket_stats``.
-        from ..operators.diagnostics import drop_hot_buckets
-
         banded = drop_hot_buckets(banded, ["band", "bucket"], max_bucket_size)
     left = banded.select("band", "bucket", F.col("id").alias("left_id"))
     right = banded.select("band", "bucket", F.col("id").alias("right_id"))
@@ -325,7 +298,7 @@ def simhash_signatures(
 
         return texts.map(sig)
 
-    df = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
+    df = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
     return df.select("id", simhash_udf("__text").alias("simhash"))
 
 
@@ -368,6 +341,80 @@ def simhash_near_dup_pairs(
     )
 
 
+def _posting_pair_counts(
+    postings: DataFrame,
+    on: list[str],
+    left: list[str | F.Column],
+    right: list[str | F.Column],
+    keep: F.Column,
+    keys: list[str],
+    max_df: int | None,
+    checkpoint_mode: str,
+    count_col: str = "common",
+) -> DataFrame:
+    """The posting self-join every overlap-counting pair operator here
+    shares (shingle Jaccard/containment, incremental match, winnowing
+    fingerprints): cap hot keys (more than ``max_df`` postings) BEFORE
+    the join, materialize the capped postings, join the ``left`` and
+    ``right`` projections of them on ``on``, keep rows passing ``keep``
+    (a side-local conjunct is pushed below the join by Catalyst) and
+    count the shared keys per ``keys`` group into ``count_col``.
+
+    ``max_df`` caps viral keys: one key in df documents otherwise
+    yields O(df^2) candidate pairs — the quadratic blowup that kills
+    inverted-index dedup at web scale.  The standard trade: pairs whose
+    entire overlap is viral keys are missed, and the count is a lower
+    bound for pairs that share a capped key.  ``None`` disables the cap
+    (exact).
+
+    The checkpoint makes the posting pipeline (shingle/fingerprint UDF
+    + df-cap window) run ONCE instead of once per join side (A/B-tested
+    vs plain recompute / repartition-reuse / persist: 8-9s -> 1.3s at
+    sf0.1); lineage truncation trades executor-failure recovery of this
+    intermediate for that."""
+    if max_df is not None:
+        postings = drop_hot_buckets(postings, on, max_df)
+    postings = materialize(postings, checkpoint_mode)
+    return (
+        postings.select(*left)
+        .join(postings.select(*right), on)
+        .filter(keep)
+        .groupBy(*keys)
+        .agg(F.count("*").alias(count_col))
+    )
+
+
+def _shingle_pair_counts(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    group_col: str | None,
+    n: int,
+    max_shingle_df: int | None,
+    checkpoint_mode: str,
+) -> DataFrame:
+    """``(left_id, right_id, lns, rns, common)`` for every undirected
+    document pair (left < right) sharing >= 1 shingle — never all-pairs
+    — with each side's distinct-shingle count and the shared count.
+    Optional ``group_col`` restricts pairs to the same group."""
+    base = _with_shingles(df, text_col, id_col, n)
+    if group_col:
+        base = base.join(df.select(F.col(id_col).alias("id"), F.col(group_col).alias("grp")), "id")
+    grp_cols = ["grp"] if group_col else []
+    on = ["s"] + grp_cols
+    sizes = base.select("id", *grp_cols, F.size("sh").alias("nsh"), F.explode("sh").alias("s"))
+    return _posting_pair_counts(
+        sizes,
+        on,
+        left=[*on, F.col("id").alias("left_id"), F.col("nsh").alias("lns")],
+        right=[*on, F.col("id").alias("right_id"), F.col("nsh").alias("rns")],
+        keep=F.col("left_id") < F.col("right_id"),
+        keys=["left_id", "right_id", "lns", "rns"],
+        max_df=max_shingle_df,
+        checkpoint_mode=checkpoint_mode,
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -377,7 +424,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
     checkpoint_mode: str = "local",
-    prefix_filter: bool | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle
     (inverted-index self-join — never all-pairs).  Optional ``group_col``
@@ -385,118 +431,21 @@ def ngram_jaccard_pairs(
     the join.  Returns ``(left_id, right_id, jaccard)``, left < right.
 
     ``max_shingle_df`` drops postings whose shingle appears in more than
-    that many documents BEFORE the self-join: one viral shingle with
-    document frequency df otherwise yields O(df^2) candidate pairs — the
-    quadratic blowup that kills inverted-index dedup at web scale.  The
-    standard trade: pairs whose entire overlap is viral shingles are
-    missed, and ``common`` (hence jaccard) is a lower bound for pairs
-    that share a capped shingle.  ``None`` disables the cap (exact).
-    The default (1000) is far above any df in a normal corpus shard and
-    never triggers on the test data (max df 25 at sf0.1).
+    that many documents BEFORE the self-join (recall trade: see
+    :func:`_posting_pair_counts`).  The default (1000) is far above any
+    df in a normal corpus shard and never triggers on the test data (max
+    df 25 at sf0.1).  The threshold compares the UNROUNDED ratio;
+    ``jaccard`` rounds to 6dp.
 
-    ``prefix_filter`` (PPJoin prefix pruning, Xiao et al. 2008; same
-    canonical md5 gram order as ``operators/joins._fuzzy_frames``):
-    each document posts only the first ``|C| - ceil(t*nsh) + 1``
-    shingles of its (capped) set in a global data-independent order;
-    candidates come from the pruned posting self-join and the exact
-    jaccard is verified per candidate with ``array_intersect`` over the
-    capped shingle arrays.  EXACT, cap included: a qualifying pair
-    needs overlap ``o >= ceil(t*nsh)`` on EACH side (``o/(nl+nr-o) >=
-    t`` and ``o <= nr`` give ``o >= t*nl``; nsh is the FULL size even
-    when the df cap shrinks the posted set, so the bound only gets
-    stronger), hence its canonically-first common shingle sits inside
-    both prefixes — pairs sharing only suffix shingles cannot reach the
-    threshold.  ``None`` = auto: on when the threshold prunes at least
-    a third of the posting mass (t >= 0.35); at dedup-screen thresholds
-    like 0.05 the prefix keeps ~95% of postings and the verify join is
-    pure overhead, so the counting path stays."""
-    use_prefix = prefix_filter if prefix_filter is not None else threshold >= 0.35
-    base = _with_shingles(df, text_col, id_col, n)
-    if group_col:
-        base = base.join(df.select(F.col(id_col).alias("id"), F.col(group_col).alias("grp")), "id")
-    grp_cols = ["grp"] if group_col else []
-    sizes = base.select("id", *grp_cols, F.size("sh").alias("nsh"), F.explode("sh").alias("s"))
-    on = ["s"] + grp_cols
-    if max_shingle_df is not None:
-        # Hot-shingle cap: drop viral postings before the self-join.
-        from ..operators.diagnostics import drop_hot_buckets
-
-        sizes = drop_hot_buckets(sizes, list(on), max_shingle_df)
-    if use_prefix:
-        # Regroup the capped postings into one canonically-ordered array
-        # per doc: the SAME frame feeds the prefix posting explode and
-        # the per-candidate verify, so it is the one materialization
-        # point (the shingle UDF + df-cap window run once).
-        docs = (
-            sizes.groupBy(*grp_cols, "id", "nsh")
-            .agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.md5("s").alias("h"), F.col("s").alias("g"))
-                    )
-                ).alias("oa")
-            )
-            .select(
-                *grp_cols, "id", "nsh",
-                # array-of-struct field pluck (GetArrayStructFields):
-                # native, no per-element lambda
-                F.col("oa.g").alias("cs"),
-            )
-        )
-        docs = materialize(docs, checkpoint_mode)
-        plen = (
-            F.size("cs")
-            - F.ceil(F.lit(float(threshold)) * F.col("nsh")).cast("int")
-            + F.lit(1)
-        )
-        pref = F.slice("cs", F.lit(1), F.greatest(plen, F.lit(0)))
-        lp = docs.select(*grp_cols, F.col("id").alias("left_id"), F.explode(pref).alias("s"))
-        rp = docs.select(*grp_cols, F.col("id").alias("right_id"), F.explode(pref).alias("s"))
-        cand = (
-            lp.join(rp, on=on)
-            .filter(F.col("left_id") < F.col("right_id"))
-            .select("left_id", "right_id")
-            .distinct()
-        )
-        verified = cand.join(
-            docs.select(
-                F.col("id").alias("left_id"),
-                F.col("nsh").alias("lns"),
-                F.col("cs").alias("lcs"),
-            ),
-            "left_id",
-        ).join(
-            docs.select(
-                F.col("id").alias("right_id"),
-                F.col("nsh").alias("rns"),
-                F.col("cs").alias("rcs"),
-            ),
-            "right_id",
-        )
-        pair_common = verified.select(
-            "left_id", "right_id", "lns", "rns",
-            F.size(F.array_intersect("lcs", "rcs")).alias("common"),
-        )
-    else:
-        # Self-joined below: checkpoint the exploded (capped) index so the
-        # shingle pipeline + df-cap materialize ONCE (A/B-tested vs plain
-        # recompute / repartition-reuse / persist: 8-9s -> 1.3s at sf0.1).
-        # Lineage truncation trades executor-failure recovery of this
-        # intermediate for not running the pipeline per join side.
-        sizes = materialize(sizes, checkpoint_mode)
-        l = sizes.select(*on, F.col("id").alias("left_id"), F.col("nsh").alias("lns"))
-        r = sizes.select(*on, F.col("id").alias("right_id"), F.col("nsh").alias("rns"))
-        pair_common = (
-            l.join(r, on=on)
-            .filter(F.col("left_id") < F.col("right_id"))
-            .groupBy("left_id", "right_id", "lns", "rns")
-            .agg(F.count("*").alias("common"))
-        )
+    One candidate path: a PPJoin prefix filter (Xiao et al. 2008) was
+    A/B-tested against this counting join and lost at every measured
+    scale (SCALING.md)."""
+    pair_common = _shingle_pair_counts(
+        df, text_col, id_col, group_col, n, max_shingle_df, checkpoint_mode
+    )
     jac = F.col("common") / (F.col("lns") + F.col("rns") - F.col("common"))
-    return (
-        pair_common.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
+    return pair_common.filter(jac >= threshold).select(
+        "left_id", "right_id", F.round(jac, 6).alias("jaccard")
     )
 
 
@@ -518,30 +467,15 @@ def ngram_containment_pairs(
     shingle count swamps the denominator) — the signal quote/excerpt
     dedup and license-text detection need.
 
-    Same inverted-index scale posture as the Jaccard twin: candidates
-    from the shingle posting self-join (exact — containment > 0 needs a
-    shared shingle), intersection size from ONE counting aggregate, and
-    each UNDIRECTED candidate pair emits its two directed scores via a
-    row-local 2-struct explode (no second join).  ``max_shingle_df``
-    caps viral-shingle postings with the documented recall trade
-    (shared-capped-shingle pairs undercount ``common``).  The threshold
-    compares the UNROUNDED ratio; ``containment`` rounds to 6dp."""
-    base = _with_shingles(df, text_col, id_col, n)  # -> (id, sh)
-    sizes = base.select(
-        "id", F.size("sh").alias("nsh"), F.explode("sh").alias("s")
-    )
-    if max_shingle_df is not None:
-        from ..operators.diagnostics import drop_hot_buckets
-
-        sizes = drop_hot_buckets(sizes, ["s"], max_shingle_df)
-    sizes = materialize(sizes, checkpoint_mode)
-    l = sizes.select("s", F.col("id").alias("left_id"), F.col("nsh").alias("lns"))
-    r = sizes.select("s", F.col("id").alias("right_id"), F.col("nsh").alias("rns"))
-    pair_common = (
-        l.join(r, "s")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id", "lns", "rns")
-        .agg(F.count("*").alias("common"))
+    Same shingle-pair counts as the Jaccard twin (exact — containment >
+    0 needs a shared shingle); each UNDIRECTED candidate pair then emits
+    its two directed scores via a row-local 2-struct explode (no second
+    join).  ``max_shingle_df`` caps viral-shingle postings with the
+    documented recall trade (shared-capped-shingle pairs undercount
+    ``common``).  The threshold compares the UNROUNDED ratio;
+    ``containment`` rounds to 6dp."""
+    pair_common = _shingle_pair_counts(
+        df, text_col, id_col, None, n, max_shingle_df, checkpoint_mode
     )
     directed = pair_common.select(
         F.col("common"),
@@ -625,38 +559,32 @@ def _incremental_match(
     materialized-index path (:func:`ngram_jaccard_incremental_indexed`)
     both delegate here, so their results are identical by construction —
     the df cap spans BOTH sides, exactly as in the recompute."""
-    if max_shingle_df is not None:
-        from ..operators.diagnostics import drop_hot_buckets
-
-        sizes = drop_hot_buckets(sizes, ["s"], max_shingle_df)
-    sizes = materialize(sizes, checkpoint_mode)
-    left = (
-        sizes.filter(F.col("__new") == 1)
-        .select("s", F.col("id").alias("new_id"), F.col("nsh").alias("lns"))
-    )
-    right = sizes.select(
-        "s", F.col("id").alias("match_id"), F.col("nsh").alias("rns"), "__new"
-    )
-    pair_common = (
-        left.join(right, "s")
-        # match earlier material only: corpus docs (id-collision-safe),
-        # or earlier new docs
-        .filter(
+    pair_common = _posting_pair_counts(
+        sizes,
+        ["s"],
+        left=[
+            "s", F.col("id").alias("new_id"), F.col("nsh").alias("lns"),
+            F.col("__new").alias("lnew"),
+        ],
+        right=["s", F.col("id").alias("match_id"), F.col("nsh").alias("rns"), "__new"],
+        # new docs match earlier material only: corpus docs
+        # (id-collision-safe), or earlier new docs
+        keep=(F.col("lnew") == 1)
+        & (
             ((F.col("__new") == 0) & (F.col("match_id") != F.col("new_id")))
             | ((F.col("__new") == 1) & (F.col("match_id") < F.col("new_id")))
-        )
-        .groupBy("new_id", "match_id", "lns", "rns")
-        .agg(F.count("*").alias("common"))
+        ),
+        keys=["new_id", "match_id", "lns", "rns"],
+        max_df=max_shingle_df,
+        checkpoint_mode=checkpoint_mode,
     )
     jac = F.col("common") / (F.col("lns") + F.col("rns") - F.col("common"))
-    return (
-        pair_common.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "match_id", "jaccard")
+    return pair_common.filter(jac >= threshold).select(
+        "new_id", "match_id", F.round(jac, 6).alias("jaccard")
     )
 
 
-def _sized_file_count(source: DataFrame, cap: int) -> int:
+def _sized_file_count(source: DataFrame, cap: int = 32) -> int:
     """File count for an index write, derived from the SOURCE frame's
     Catalyst size estimate (driver-side, no job): one file per ~16 MB of
     source bytes (postings run ~2x the text they index, landing files in
@@ -676,7 +604,7 @@ def build_shingle_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_files: int = 32,
+    num_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize the accepted corpus's inverted shingle index as a
@@ -694,12 +622,12 @@ def build_shingle_index(
     spread.  n (the shingle width) is part of the index's identity —
     store it in the path and never mix widths in one index.
 
-    ``num_files`` is a CAP, not a constant: the written file count is
-    derived from the corpus's estimated bytes (guide §6 — output files
-    should be sized, not counted), so a small corpus writes one
-    full-sized file instead of ``num_files`` splinters (32 tiny files =
-    32 shuffle tasks on the write and 32 file opens on every index
-    scan), while a fact-scale corpus saturates the cap."""
+    ``num_files``: an int is the exact file count.  ``None`` (default)
+    derives it from the corpus's estimated bytes (guide §6 — output
+    files should be sized, not counted; :func:`_sized_file_count`), so
+    a small corpus writes one full-sized file instead of 32 splinters
+    (32 shuffle tasks on the write and 32 file opens on every index
+    scan), while a fact-scale corpus reaches 32 files."""
     from ..sources.writers import write_table
 
     # Empty corpus (a freshly-seeded streaming-gate index): skip the
@@ -716,7 +644,8 @@ def build_shingle_index(
         num_files = 1
     else:
         postings = shingle_postings(corpus, text_col, id_col, n)
-        num_files = _sized_file_count(corpus, num_files)
+        if num_files is None:
+            num_files = _sized_file_count(corpus)
     write_table(postings.repartition(num_files, F.col("s")), path, mode=mode)
 
 
@@ -726,7 +655,7 @@ def update_shingle_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_files: int = 8,
+    num_files: int | None = None,
     postings: DataFrame | None = None,
 ) -> None:
     """Append the ACCEPTED documents of a processed batch to the
@@ -740,12 +669,17 @@ def update_shingle_index(
     ``postings``: pre-computed ``shingle_postings`` rows for this exact
     batch — pass them when the batch was already shingled for matching
     (the streaming gate), so the text is shingled once per batch, not
-    once per consumer.  Must come from the same ``n`` as the index."""
+    once per consumer.  Must come from the same ``n`` as the index.
+
+    ``num_files``: an int is the exact file count of this append.
+    ``None`` (default) sizes it from ``accepted_new``'s estimated bytes
+    (even when ``postings`` is passed), capped at 8 files per append."""
     from ..sources.writers import write_table
 
     if postings is None:
         postings = shingle_postings(accepted_new, text_col, id_col, n)
-    num_files = _sized_file_count(accepted_new, num_files)
+    if num_files is None:
+        num_files = _sized_file_count(accepted_new, cap=8)
     write_table(postings.repartition(num_files, F.col("s")), path, mode="append")
 
 
@@ -911,7 +845,7 @@ def winnow_fingerprints(
 
         return texts.map(fp)
 
-    base = _spread(df.select(F.col(id_col), F.col(text_col).alias("__text")))
+    base = spread(df.select(F.col(id_col), F.col(text_col).alias("__text")))
     return base.select(
         F.col(id_col), F.explode(winnow_udf("__text")).alias("fingerprint")
     ).distinct()
@@ -942,24 +876,17 @@ def winnow_match_pairs(
     ``left_id < right_id``."""
     fp = winnow_fingerprints(df, text_col, id_col, k, window)
     posting = fp.select(F.col(id_col).alias("id"), F.col("fingerprint").alias("f"))
-    if max_fingerprint_df is not None:
-        from ..operators.diagnostics import drop_hot_buckets
-
-        posting = drop_hot_buckets(posting, ["f"], max_fingerprint_df)
-    # Self-joined below: materialize the capped posting index so the
-    # fingerprint pipeline (ArrowEvalPython + distinct + df-cap window)
-    # runs ONCE, not once per join side — the same measured trade as
-    # ngram_jaccard_pairs (lineage truncation vs per-side recompute).
-    posting = materialize(posting, checkpoint_mode)
-    l = posting.select(F.col("id").alias("left_id"), "f")
-    r = posting.select(F.col("id").alias("right_id"), "f")
-    return (
-        l.join(r, "f")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= int(min_shared))
-    )
+    return _posting_pair_counts(
+        posting,
+        ["f"],
+        left=[F.col("id").alias("left_id"), "f"],
+        right=[F.col("id").alias("right_id"), "f"],
+        keep=F.col("left_id") < F.col("right_id"),
+        keys=["left_id", "right_id"],
+        max_df=max_fingerprint_df,
+        checkpoint_mode=checkpoint_mode,
+        count_col="shared_fps",
+    ).filter(F.col("shared_fps") >= int(min_shared))
 
 
 def positional_kgram_postings(
@@ -1071,8 +998,6 @@ def duplicate_span_runs(
     space (`operators/joins.norm_string`)."""
     grams = positional_kgram_postings(df, text_col, id_col, k)
     if max_kgram_df is not None:
-        from ..operators.diagnostics import drop_hot_buckets
-
         grams = drop_hot_buckets(grams, ["h"], max_kgram_df)
     return stitch_span_runs(grams, grams, k=k, min_len=min_len)
 
@@ -1165,8 +1090,6 @@ def self_duplicate_span_runs(
     the cross-doc join."""
     grams = positional_kgram_postings(df, text_col, id_col, k)
     if max_kgram_df is not None:
-        from ..operators.diagnostics import drop_hot_buckets
-
         grams = drop_hot_buckets(grams, ["h"], max_kgram_df)
     from pyspark.sql import Window
 

@@ -11,7 +11,9 @@ Honors SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like bench.py.
 
 from __future__ import annotations
 
+import argparse
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -23,23 +25,22 @@ from interlinked_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 5
-    if "--reps" in sys.argv:
-        reps = int(sys.argv[sys.argv.index("--reps") + 1])
-        args = [a for a in args if a != str(reps)]
-    explain = "--explain" in sys.argv
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("queries", nargs="+", metavar="query")
+    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--explain", action="store_true")
+    opts = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("qbench")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = Path(__file__).resolve().parent
-    for name in args:
+    for name in opts.queries:
         spark.sparkContext.setJobDescription(f"qbench warm: {name}")
         catalog.run_query(name, spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         times = []
-        for i in range(reps):
+        for i in range(opts.reps):
             spark.sparkContext.setJobDescription(f"qbench {name} pass {i}")
             t0 = time.perf_counter()
             catalog.run_query(name, spark, sf_dir).write.format("noop").mode(
@@ -47,11 +48,9 @@ def main() -> None:
             ).save()
             times.append(time.perf_counter() - t0)
         times.sort()
-        med = times[len(times) // 2] if len(times) % 2 else (
-            times[len(times) // 2 - 1] + times[len(times) // 2]
-        ) / 2
+        med = statistics.median(times)
         print(f"{name}: median={med:.3f}s min={times[0]:.3f}s all={[round(t, 3) for t in times]}")
-        if explain:
+        if opts.explain:
             df = catalog.run_query(name, spark, sf_dir)
             (out_dir / f"{name}_current.txt").write_text(
                 df._sc._jvm.PythonSQLUtils.explainString(

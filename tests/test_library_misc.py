@@ -141,11 +141,15 @@ def test_ngram_cap_bounds_viral_shingle(spark):
 
     viral = "the quick brown"
     rows = [(i, f"{viral} unique{i} token{i} filler{i} word{i}") for i in range(40)]
+    # Twins that also share the viral shingle: the cap drops it from
+    # ``common`` but not from each side's shingle count, so their
+    # jaccard becomes the documented lower bound 2/4, not 3/3.
+    rows += [(100, f"{viral} fox jumps"), (101, f"{viral} fox jumps")]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     uncapped = ngram_jaccard_pairs(df, threshold=0.01, max_shingle_df=None)
-    assert uncapped.count() == 40 * 39 // 2
+    assert uncapped.count() == 42 * 41 // 2
     capped = ngram_jaccard_pairs(df, threshold=0.01, max_shingle_df=10)
-    assert capped.count() == 0
+    assert capped.collect() == [(100, 101, 0.5)]
 
 
 def test_salted_join_rejects_outer_on_replicated_side(spark):

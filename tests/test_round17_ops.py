@@ -1,10 +1,8 @@
-"""Round-17 optimization guards: PPJoin prefix filter on the shingle
-Jaccard self-join must be result-identical to the counting path (cap
-on and off, grouped and not), the spread compute floor must stop
-shredding tiny frames while honoring explicit widths, and index file
-counts must derive from size, not a constant."""
+"""Round-17 optimization guards: shingle Jaccard pairs must equal a
+brute-force reference and filter on the unrounded ratio, the spread
+compute floor must stop shredding tiny frames while honoring explicit
+widths, and index file counts must derive from size unless given."""
 
-import pyspark.sql.functions as F
 import pytest
 
 from .conftest import SF_SMOKE as SF
@@ -15,60 +13,58 @@ def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
 
-def _pairs_sorted(df):
-    return sorted(tuple(r) for r in df.collect())
+# ---------- shingle Jaccard pairs (llm/dedup.ngram_jaccard_pairs) ----------
 
 
-# ---------- PPJoin prefix filter (llm/dedup.ngram_jaccard_pairs) ----------
+def _reference_jaccard(texts, threshold, n=3):
+    import re
+
+    ws = re.compile(r"[ \t\n\f\r]+")
+
+    def sh(t):
+        toks = ws.sub(" ", t.strip(" \t\n\f\r").lower()).split(" ")
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = sorted((i, sh(t)) for i, t in texts.items() if t is not None)
+    out = {}
+    for x, (li, a) in enumerate(sets):
+        for ri, b in sets[x + 1 :]:
+            common = len(a & b)
+            if common and common / len(a | b) >= threshold:
+                out[(li, ri)] = common / len(a | b)
+    return out
 
 
 @pytest.mark.parametrize("threshold", [0.5, 0.35, 0.05])
-def test_prefix_filter_matches_counting_path(spark, docs, threshold):
+def test_jaccard_pairs_match_reference(spark, docs, threshold):
     from interlinked_spark.llm.dedup import ngram_jaccard_pairs
 
-    base = ngram_jaccard_pairs(docs, threshold=threshold, prefix_filter=False)
-    pref = ngram_jaccard_pairs(docs, threshold=threshold, prefix_filter=True)
-    assert _pairs_sorted(base) == _pairs_sorted(pref)
+    texts = {r.doc_id: r.text for r in docs.collect()}
+    ref = _reference_jaccard(texts, threshold)
+    got = {
+        (r.left_id, r.right_id): r.jaccard
+        for r in ngram_jaccard_pairs(docs, threshold=threshold).collect()
+    }
+    assert got.keys() == ref.keys()
+    assert all(abs(got[k] - ref[k]) < 1e-6 for k in ref)
 
 
-def test_prefix_filter_matches_counting_path_grouped(spark, docs):
-    from interlinked_spark.llm.dedup import ngram_jaccard_pairs
-
-    d = docs.withColumn("grp_col", (F.col("doc_id") % 2).cast("int"))
-    base = ngram_jaccard_pairs(
-        d, group_col="grp_col", threshold=0.5, prefix_filter=False
+def test_jaccard_threshold_compares_unrounded_ratio(spark):
+    # Jaccard 2/3 rounds to 0.666667, which is above this threshold;
+    # the unrounded ratio is below it, so the pair must not pass.
+    from interlinked_spark.llm.dedup import (
+        ngram_jaccard_incremental,
+        ngram_jaccard_pairs,
     )
-    pref = ngram_jaccard_pairs(
-        d, group_col="grp_col", threshold=0.5, prefix_filter=True
+
+    d = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d e")], "doc_id long, text string"
     )
-    assert _pairs_sorted(base) == _pairs_sorted(pref)
-
-
-def test_prefix_filter_matches_under_tight_df_cap(spark, docs):
-    # A cap LOW enough to actually drop postings on the smoke corpus:
-    # the prefix bound uses the FULL set size while the posted set is
-    # the capped one, so equality here pins the cap-interaction proof.
-    from interlinked_spark.llm.dedup import ngram_jaccard_pairs
-
-    base = ngram_jaccard_pairs(
-        docs, threshold=0.4, max_shingle_df=2, prefix_filter=False
-    )
-    pref = ngram_jaccard_pairs(
-        docs, threshold=0.4, max_shingle_df=2, prefix_filter=True
-    )
-    assert _pairs_sorted(base) == _pairs_sorted(pref)
-
-
-def test_prefix_filter_auto_threshold_gate(spark, docs):
-    # auto = on at clustering thresholds, off at screening thresholds —
-    # pinned via the plan: the prefix path carries an array_intersect
-    # verify, the counting path never does.
-    from interlinked_spark.llm.dedup import ngram_jaccard_pairs
-
-    on_plan = ngram_jaccard_pairs(docs, threshold=0.5)._jdf.queryExecution().optimizedPlan().toString()
-    off_plan = ngram_jaccard_pairs(docs, threshold=0.05)._jdf.queryExecution().optimizedPlan().toString()
-    assert "array_intersect" in on_plan
-    assert "array_intersect" not in off_plan
+    assert ngram_jaccard_pairs(d, threshold=0.6666668).count() == 0
+    assert ngram_jaccard_pairs(d, threshold=0.6666666).collect() == [(1, 2, 0.666667)]
+    corpus, new = d.filter("doc_id = 1"), d.filter("doc_id = 2")
+    assert ngram_jaccard_incremental(corpus, new, threshold=0.6666668).count() == 0
+    assert ngram_jaccard_incremental(corpus, new, threshold=0.6666666).count() == 1
 
 
 # ---------- spread compute floor (operators/partitioning.spread) ----------
@@ -110,15 +106,27 @@ def test_spread_results_unchanged(spark):
     )
 
 
-# ---------- sized index file count (llm/dedup._sized_file_count) ----------
+# ---------- index file count (llm/dedup.build/update_shingle_index) ----------
 
 
 def test_shingle_index_file_count_scales_with_source(spark, docs, tmp_path):
     from interlinked_spark.llm.dedup import _sized_file_count, build_shingle_index
 
-    assert _sized_file_count(docs, 32) == 1  # KB-scale smoke corpus
+    assert _sized_file_count(docs) == 1  # KB-scale smoke corpus
     path = str(tmp_path / "idx")
     build_shingle_index(docs, path, n=3)
     import glob
 
     assert len(glob.glob(f"{path}/part-*")) == 1
+
+
+def test_shingle_index_explicit_file_count_is_exact(spark, docs, tmp_path):
+    import glob
+
+    from interlinked_spark.llm.dedup import build_shingle_index, update_shingle_index
+
+    path = str(tmp_path / "idx")
+    build_shingle_index(docs, path, n=3, num_files=3)
+    assert len(glob.glob(f"{path}/part-*")) == 3
+    update_shingle_index(docs.limit(50), path, n=3, num_files=2)
+    assert len(glob.glob(f"{path}/part-*")) == 5
