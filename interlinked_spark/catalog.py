@@ -3162,11 +3162,12 @@ def q_dedup_kept_greedy(d: DataFrame) -> DataFrame:
     in doc-id order over the 0.5-Jaccard near-dup graph — a doc is kept
     iff no KEPT earlier doc is a near-dup, so a chain A~B~C keeps A and
     C (contrast ``dedup_kept_corpus``'s one-per-cluster rule).  Engine:
-    iterative distributed resolution, one edge-set join + agg per round
-    (`operators/graph.greedy_first_fit`); oracle: the same greedy
-    fixpoint as a single-row recursive CTE accumulating accepted/
-    rejected lists (each round resolves at least the minimum unresolved
-    doc, so it terminates)."""
+    `operators/graph.greedy_first_fit` — a near-dup graph under the
+    broadcast threshold is swept once on the driver, a larger one is
+    resolved by distributed rounds of edge-set join + agg; oracle: the
+    same greedy fixpoint as a single-row recursive CTE accumulating
+    accepted/rejected lists (each round resolves at least the minimum
+    unresolved doc, so it terminates)."""
     from .llm.dedup import near_dup_keep_greedy
 
     return near_dup_keep_greedy(d, threshold=0.5)

@@ -74,14 +74,17 @@ def _with_shingles(
 
         return texts.map(sh)
 
-    # Cheap scan-side pre-filter (>= n tokens <=> >= 1 shingle); a
-    # post-hoc size(sh)>0 filter would be predicate-pushed below the
-    # repartition exchange and run the UDF twice.
+    # Cheap scan-side pre-filter (>= n tokens <=> >= 1 shingle), so
+    # texts with no shingle never reach the Python worker.  Every caller
+    # explodes ``sh``, and Catalyst infers ``size(sh) > 0 AND
+    # isnotnull(sh)`` under each explode; pushed through this projection,
+    # that filter would evaluate the UDF a second time.  Marking the UDF
+    # nondeterministic pins the inferred filter above the projection.
     base = df.filter(F.size(F.split(_normalized(text_col), " ")) >= n).select(
         F.col(id_col).alias("id"), F.col(text_col).alias("__text")
     )
     base = spread(base)
-    return base.select("id", shingle_udf("__text").alias(out))
+    return base.select("id", shingle_udf.asNondeterministic()("__text").alias(out))
 
 
 def minhash_signature_bands(
@@ -773,7 +776,12 @@ def near_dup_keep_greedy(
     even though A and C are NOT near-dups), and the streaming gate's
     seen-anyone rule does the same one batch at a time.  First-fit is
     the retention-maximizing rule: every discarded doc has a kept
-    near-dup witness, and no two kept docs are near-dups."""
+    near-dup witness, and no two kept docs are near-dups.
+
+    A near-dup graph under ``spark.sql.autoBroadcastJoinThreshold``
+    (estimated bytes) is resolved by one sweep on the driver; a larger
+    one by distributed rounds of join + aggregate (see
+    ``greedy_first_fit``)."""
     from ..operators.graph import greedy_first_fit
 
     pairs = ngram_jaccard_pairs(

@@ -212,15 +212,30 @@ def greedy_first_fit(
     not poison C) — the data-retention-maximizing rule a training
     pipeline wants when near-dup is a similarity, not an equivalence.
 
-    Distributed resolution by rounds: a vertex resolves once every
-    smaller-id neighbor is resolved — rejected if any resolved KEPT,
-    kept otherwise.  Each round is one join + one aggregate over the
-    EDGE set (the near-dup graph, tiny next to the corpus), rounds =
-    longest dependency chain (bounded by component diameter; cliques
-    resolve in 2).  The driver sees one unresolved-count scalar per
-    round, never the graph.  Progress is guaranteed — the minimum
-    unresolved vertex always resolves — so ``max_iterations`` is a
-    pathological-chain bound, not a tuning knob."""
+    Two regimes, picked by the edge count measured when the oriented
+    edges are materialized:
+
+    * **Driver sweep** when ``0 < edges * estimated row bytes <=
+      spark.sql.autoBroadcastJoinThreshold`` — the size at which Spark
+      would ship the frame whole anyway (pagerank's broadcast gate).
+      The edges are collected, ids are swept ascending (a vertex is
+      rejected iff one of its smaller neighbors is kept — exact, since
+      every smaller id is decided first), and the rejected ids join
+      back as a broadcast frame in the caller's action: one collect
+      instead of a job per round.  A threshold <= 0 disables it.
+    * **Distributed rounds** otherwise: a vertex resolves once every
+      smaller-id neighbor is resolved — rejected if any resolved KEPT,
+      kept otherwise.  Each round is one join + one aggregate over the
+      EDGE set (the near-dup graph, tiny next to the corpus), rounds =
+      longest dependency chain (bounded by component diameter; cliques
+      resolve in 2).  The driver sees one unresolved-count scalar per
+      round, never the graph.  Progress is guaranteed — the minimum
+      unresolved vertex always resolves — so ``max_iterations`` is a
+      pathological-chain bound, not a tuning knob.
+
+    Edge endpoints are expected to be vertices: the rounds ignore an
+    edge whose smaller end is not in ``vertices``, the sweep counts
+    that end as kept."""
     # Normalize orientation: "earlier" is defined by ID ORDER, not by
     # which column a pair arrived in — a mis-oriented edge (7, 3) must
     # mean "3 gates 7", and a pair present in both orientations must
@@ -243,6 +258,11 @@ def greedy_first_fit(
     else:
         earlier = materialize(earlier_plan, checkpoint_mode)
         n_edges = earlier.count()
+    # An edge set Spark would broadcast anyway is cheaper to resolve on
+    # the driver than by rounds of jobs (same byte gate as pagerank).
+    est_bytes = n_edges * _estimated_row_bytes(earlier.schema)
+    if 0 < est_bytes <= _auto_broadcast_threshold_bytes(earlier.sparkSession):
+        return _greedy_first_fit_on_driver(earlier, vertices, v_col)
     n_parts = _adaptive_parts(earlier, n_edges, rows_per_partition)
     if n_parts < earlier.rdd.getNumPartitions():
         # One-time re-lay so per-round stages run n_parts tasks (the
@@ -303,6 +323,33 @@ def greedy_first_fit(
         if not unresolved:
             return status.select(F.col("v").alias(v_col), (F.col("st") == 1).alias("kept"))
     raise RuntimeError(f"greedy_first_fit did not converge in {max_iterations} iterations")
+
+
+def _greedy_first_fit_on_driver(
+    earlier: DataFrame, vertices: DataFrame, v_col: str
+) -> DataFrame:
+    """First-fit over an oriented ``(d, e)`` edge frame small enough to
+    collect: sweep ``d`` ascending and reject ``d`` iff some ``e`` of it
+    is not rejected.  Exact, because every ``e < d`` is decided before
+    ``d`` is reached.  The rejected ids go back as a broadcast frame
+    typed like ``d``, so the distinct and the join run lazily in the
+    caller's action."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    pdf = earlier.toPandas().sort_values("d")
+    rejected = set()
+    for d, e in zip(pdf["d"].tolist(), pdf["e"].tolist()):
+        if e not in rejected:
+            rejected.add(d)
+    rej = earlier.sparkSession.createDataFrame(
+        pd.DataFrame({"__rej": list(rejected)}),
+        T.StructType([T.StructField("__rej", earlier.schema["d"].dataType)]),
+    )
+    verts = vertices.select(F.col(v_col).alias("v")).distinct()
+    return verts.join(F.broadcast(rej), verts["v"] == rej["__rej"], "left").select(
+        F.col("v").alias(v_col), F.col("__rej").isNull().alias("kept")
+    )
 
 
 def _estimated_row_bytes(schema) -> int:

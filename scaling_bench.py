@@ -34,7 +34,9 @@ Perturbation design (what makes the copies scale-honest):
 Usage: ``python scaling_bench.py`` (env: SPARK_GRAFT_SF_DIR base dir,
 default /root/testdata/sf0.1; SPARK_GRAFT_SCALE_KS, default "1,3,10";
 SPARK_GRAFT_CPUS as in bench.py).  Prints one JSON line per (query, k)
-as it goes, then a final summary line.
+as it goes, then a final summary line.  ``python scaling_bench.py
+greedy-gate-ab`` runs only :func:`greedy_gate_ab` (synthetic graphs, no
+input files) and prints one JSON line per graph.
 """
 
 from __future__ import annotations
@@ -944,6 +946,68 @@ def ivfpq_filter_selectivity_sweep(spark: SparkSession, sf_dir: str) -> dict:
     return out
 
 
+def greedy_gate_ab(spark: SparkSession, n_edges: int = 650_000, reps: int = 5) -> dict:
+    """A/B of ``greedy_first_fit``'s two paths at the top of its driver
+    gate: ``n_edges`` long-id edges estimate 16 bytes each, so the
+    default 650k sit just under the default 10 MB broadcast threshold.
+    The arms alternate within one session, the distributed rounds with
+    ``spark.sql.autoBroadcastJoinThreshold=-1``; each timing is build +
+    noop write, and both arms must return the same kept set.  Graphs:
+    ``chains`` is disjoint 11-vertex paths (one vertex resolves per
+    round, so 11 rounds); ``random`` is hashed uniform pairs over
+    ``2 * n_edges`` vertices."""
+    from interlinked_spark.operators.graph import greedy_first_fit
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    n_chains = n_edges // 10
+    graphs = {
+        "chains": (
+            spark.range(n_chains * 11)
+            .filter(F.col("id") % 11 != 10)
+            .select(F.col("id").alias("left_id"), (F.col("id") + 1).alias("right_id")),
+            spark.range(n_chains * 11).withColumnRenamed("id", "vertex"),
+        ),
+        "random": (
+            spark.range(n_edges).select(
+                F.pmod(F.xxhash64("id", F.lit(1)), F.lit(2 * n_edges)).alias("left_id"),
+                F.pmod(F.xxhash64("id", F.lit(2)), F.lit(2 * n_edges)).alias("right_id"),
+            ),
+            spark.range(2 * n_edges).withColumnRenamed("id", "vertex"),
+        ),
+    }
+    old = spark.conf.get(key)
+    out = {}
+    try:
+        for name, (edges, verts) in graphs.items():
+            secs = {"driver": [], "distributed": []}
+            digests = set()
+            for rep in range(reps + 1):  # rep 0 warms both arms, untimed
+                for arm, thresh in (("driver", old), ("distributed", "-1")):
+                    spark.conf.set(key, thresh)
+                    start = time.perf_counter()
+                    kept = greedy_first_fit(edges, verts)
+                    kept.write.format("noop").mode("overwrite").save()
+                    if rep:
+                        secs[arm].append(round(time.perf_counter() - start, 3))
+                    row = kept.agg(
+                        F.sum(F.col("kept").cast("long")).alias("n"),
+                        F.bit_xor(F.xxhash64("vertex", "kept")).alias("h"),
+                    ).first()
+                    digests.add((row.n, row.h))
+            if len(digests) != 1:
+                raise AssertionError(f"greedy_gate_ab {name}: arms disagree {digests}")
+            out[name] = {
+                "secs": secs,
+                "median": {a: sorted(t)[len(t) // 2] for a, t in secs.items()},
+                "driver_won": sum(d < r for d, r in zip(secs["driver"], secs["distributed"])),
+                "kept": digests.pop()[0],
+            }
+            print(json.dumps({name: out[name]}, separators=(",", ":")), flush=True)
+    finally:
+        spark.conf.set(key, old)
+    return out
+
+
 def fit_exponent(points: list[tuple[float, float]]) -> float:
     """Least-squares slope of log(y) on log(x)."""
     import math
@@ -1130,4 +1194,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:] == ["greedy-gate-ab"]:
+        greedy_gate_ab(get_spark("greedy-gate-ab"))
+    else:
+        main()

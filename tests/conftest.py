@@ -13,3 +13,15 @@ def spark():
     s = get_spark("tests", master="local[8]")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Run one test with ``spark.sql.autoBroadcastJoinThreshold=-1`` —
+    operators gated on that threshold take their distributed path —
+    and restore the session value after it."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)

@@ -362,7 +362,7 @@ def test_ngram_jaccard_group_col_never_crosses_groups(sp):
     assert got == ungrouped
 
 
-@given(
+_greedy_graphs = given(
     edges=st.lists(
         st.tuples(st.integers(0, 11), st.integers(0, 11)).filter(
             lambda p: p[0] != p[1]
@@ -372,13 +372,30 @@ def test_ngram_jaccard_group_col_never_crosses_groups(sp):
     ),
     n=st.integers(4, 12),
 )
+
+
+@_greedy_graphs
 @OP_SETTINGS
 def test_greedy_first_fit_matches_sequential_reference(sp, edges, n):
     """greedy_first_fit == the trivially-correct sequential greedy MIS:
     walk ids ascending, keep a vertex iff no kept neighbor so far.
     Also pins the two policy laws — kept set is independent (no edge
     inside) and maximal (every rejected vertex has a kept earlier
-    neighbor)."""
+    neighbor).  These graphs fit the broadcast threshold, so this runs
+    the driver-side sweep."""
+    _check_greedy_first_fit(sp, edges, n)
+
+
+@_greedy_graphs
+@OP_SETTINGS
+def test_greedy_first_fit_distributed_matches_sequential_reference(
+    sp, no_auto_broadcast, edges, n
+):
+    """The same law on the distributed rounds (threshold disabled)."""
+    _check_greedy_first_fit(sp, edges, n)
+
+
+def _check_greedy_first_fit(sp, edges, n):
     from interlinked_spark.operators.graph import greedy_first_fit
 
     es = sorted({(min(a, b), max(a, b)) for a, b in edges if max(a, b) < n})

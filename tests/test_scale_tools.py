@@ -718,7 +718,18 @@ def test_vector_index_never_rebands_corpus_and_appends_exactly(spark, tmp_path):
 def test_greedy_first_fit_normalizes_edge_orientation(spark):
     """'Earlier' is id order, not column position: a mis-oriented edge
     (7, 3) must mean 3 gates 7, and a pair present in both orientations
-    must not deadlock the rounds."""
+    must not deadlock the rounds (driver-side sweep)."""
+    _check_greedy_orientation(spark)
+
+
+def test_greedy_first_fit_normalizes_edge_orientation_distributed(
+    spark, no_auto_broadcast
+):
+    """The same orientation rule on the distributed rounds."""
+    _check_greedy_orientation(spark)
+
+
+def _check_greedy_orientation(spark):
     from interlinked_spark.operators.graph import greedy_first_fit
 
     edges = spark.createDataFrame(
@@ -727,6 +738,64 @@ def test_greedy_first_fit_normalizes_edge_orientation(spark):
     verts = spark.createDataFrame([(3,), (5,), (7,)], ["vertex"])
     got = {r.vertex: r.kept for r in greedy_first_fit(edges, verts).collect()}
     assert got == {3: True, 5: True, 7: False}
+
+
+@pytest.mark.parametrize("checkpoint_mode", ["local", "reliable"])
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_greedy_first_fit_input_shapes(spark, request, path, checkpoint_mode):
+    """Both resolution paths agree on duplicate vertex rows, vertices
+    absent from every edge, string ids and either checkpoint mode; one
+    row per distinct vertex comes out."""
+    from interlinked_spark.operators.graph import greedy_first_fit
+
+    if path == "distributed":
+        request.getfixturevalue("no_auto_broadcast")
+    # 1~2~3 chain keeps 1 and 3; 9 touches no edge; 2 and 9 repeat.
+    edges = spark.createDataFrame([(1, 2), (3, 2)], ["left_id", "right_id"])
+    verts = spark.createDataFrame([(1,), (2,), (2,), (3,), (9,), (9,)], ["vertex"])
+    out = greedy_first_fit(edges, verts, checkpoint_mode=checkpoint_mode)
+    assert ("__rej" in physical_plan(out)) == (path == "driver")
+    assert sorted(map(tuple, out.collect())) == [
+        (1, True), (2, False), (3, True), (9, True)
+    ]
+
+    # String ids: "a" gates "b" and "d"; "c" survives its rejected "b".
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("a", "d")], ["left_id", "right_id"]
+    )
+    verts = spark.createDataFrame([(v,) for v in "abcde"], ["doc"])
+    out = greedy_first_fit(edges, verts, v_col="doc", checkpoint_mode=checkpoint_mode)
+    assert dict(map(tuple, out.collect())) == {
+        "a": True, "b": False, "c": True, "d": False, "e": True
+    }
+
+
+def test_near_dup_keep_greedy_job_budget(spark):
+    """The first-fit dedup of the test documents builds in <= 6 Spark
+    jobs: the near-dup graph is small enough to resolve on the driver
+    instead of by rounds of join + aggregate jobs (17 jobs)."""
+    from interlinked_spark.llm.dedup import near_dup_keep_greedy
+
+    sc = spark.sparkContext
+    group = "test:near_dup_keep_greedy_job_budget"
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sc.setJobGroup(group, "job budget")
+    try:
+        near_dup_keep_greedy(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+def test_shingle_udf_evaluated_once(spark):
+    """Exploding the shingle array must not duplicate the Python UDF:
+    the size/not-null filter Spark infers under the explode stays above
+    the UDF projection instead of re-evaluating it below."""
+    from interlinked_spark.llm.dedup import _with_shingles
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    postings = _with_shingles(docs, "text", "doc_id", 3).select(F.explode("sh"))
+    assert physical_plan(postings).count("ArrowEvalPython") == 1
 
 
 def test_compact_table_recovers_from_crash_residue(spark, tmp_path):
