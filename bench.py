@@ -105,70 +105,6 @@ HEADLINE = [
 ]
 
 
-def mine_tail(doc: dict, known: set) -> tuple[dict, str]:
-    """Recover per-query times from a driver record whose 2000-char tail
-    capture truncated the JSON line (parsed: null).  Two trusted spans,
-    each requiring its EXPLICIT marker in the tail (a marker-less tail —
-    r06's pure ratio data — mines nothing, because mining ratios
-    (0.7-1.3) as seconds collapses floors permanently):
-
-    - ``"queries":{`` — today's compact contract line (MEDIANS; kind
-      'parsed': the whole dict survives in the end-of-line tail, so it
-      is median-grade for vs_prev).
-    - ``"min": {`` — the pre-r07 full-payload format (per-pass MINIMUMS;
-      kind 'mined': floor-only).
-
-    Regression-pinned against the real BENCH_r06.json in
-    ``tests/test_bench_tools.py``.  Returns ({}, 'none') when nothing
-    trustworthy is present."""
-    import re as _re
-
-    tail = doc.get("tail") or ""
-    if doc.get("rc") not in (0, None):
-        return {}, "none"
-
-    def span_after(marker: str) -> str | None:
-        start = tail.find(marker)
-        if start == -1:
-            return None
-        start += len(marker)
-        end = tail.find("}", start)
-        return tail[start : end if end != -1 else len(tail)]
-
-    for marker, kind in (('"queries":{', "parsed"), ('"min": {', "mined")):
-        span = span_after(marker)
-        if span is None:
-            continue
-        out = {}
-        for m in _re.finditer(r'"([a-z0-9_]+)": ?([0-9]+\.[0-9]+)', span):
-            if m.group(1) in known:
-                out[m.group(1)] = float(m.group(2))
-        if out:
-            return out, kind
-    return {}, "none"
-
-
-def round_queries_record(p: Path, known: set) -> tuple[dict, str]:
-    """Returns (per-query seconds, kind).  kind 'parsed' = median-grade
-    (intact contract line, or a tail whose compact queries dict survived
-    whole — safe for vs_prev); 'mined' = pre-r07 minimums recovered from
-    a truncated tail (floor-only — comparing current medians to prior
-    minimums inflates vs_prev, ADVICE r6); 'none' = unusable."""
-    try:
-        doc = json.loads(p.read_text())
-    except (json.JSONDecodeError, OSError):
-        return {}, "none"
-    if not isinstance(doc, dict):
-        return {}, "none"
-    # Driver records wrap our JSON line under "parsed".
-    parsed = doc.get("parsed")
-    if isinstance(parsed, dict):
-        return parsed.get("queries", {}) or {}, "parsed"
-    if "tail" in doc:
-        return mine_tail(doc, known)
-    return doc.get("queries", {}), "parsed"
-
-
 def _settle(max_wait_s: int = 60) -> None:
     """Wait (bounded) for trailing machine load to drain: back-to-back
     runs on local[32] skew individual query times 1.5-2.5x when a prior
@@ -476,38 +412,35 @@ def main() -> None:
     }
     root = Path(__file__).resolve().parent
     prev_files = sorted(root.glob("BENCH_r*.json"))
-    known = set(catalog.ORACLES)
-
-    def _round_queries(p: Path) -> tuple[dict, str]:
-        return round_queries_record(p, known)
 
     # BENCH_r*.json driver records and BENCH_FLOOR.json are sf0.1
     # numbers.  A local iteration run at sf0.01/0.001 must neither
-    # compare against them (times differ 5-50x) nor merge its minimums
+    # compare against them (times differ 5-50x) nor merge its medians
     # into the canonical floor (a sf0.001 smoke run would "beat" every
     # sf0.1 floor and poison regression tracking forever).  Off-sf runs
     # get their own BENCH_FLOOR_sf<sf>.json.
     canonical = isinstance(payload["sf"], float) and abs(payload["sf"] - 0.1) < 1e-9
 
     if prev_files and canonical:
-        prev, prev_kind = _round_queries(prev_files[-1])
-        # Median-vs-median only: a mined record holds minimums, and
-        # median/minimum ratios read as spurious regressions.
-        if prev_kind == "parsed":
-            ratios = {
-                n: round(t / prev[n], 2)
-                for n, t in timings.items()
-                if prev.get(n)
+        # Driver records wrap our JSON line under "parsed"; a record
+        # without an intact line has nothing to compare against.
+        try:
+            prev = json.loads(prev_files[-1].read_text())["parsed"]["queries"] or {}
+        except (OSError, ValueError, KeyError, TypeError):
+            prev = {}
+        ratios = {
+            n: round(t / prev[n], 2) for n, t in timings.items() if prev.get(n)
+        }
+        if ratios:
+            payload["vs_prev"] = {
+                "round": prev_files[-1].stem,
+                "ratio": ratios,
             }
-            if ratios:
-                payload["vs_prev"] = {
-                    "round": prev_files[-1].stem,
-                    "ratio": ratios,
-                }
 
-    # Floor tracking: per-query best time across ALL recorded rounds
-    # (persisted to BENCH_FLOOR.json) — a slow creep can't hide behind
-    # round-over-round ratios.
+    # Floor tracking: per-query best time, persisted to
+    # BENCH_FLOOR.json (the floor's only source) — a slow creep can't
+    # hide behind round-over-round ratios.  Floors re-based in round 16
+    # (SCALING.md "Round 16 — floor staleness") are stored re-based.
     floor_file = root / (
         "BENCH_FLOOR.json" if canonical else f"BENCH_FLOOR_sf{sf}.json"
     )
@@ -515,40 +448,6 @@ def main() -> None:
         floor: dict[str, float] = json.loads(floor_file.read_text())
     except (json.JSONDecodeError, OSError):
         floor = {}
-    # Floor staleness policy (round 16).  A floor is RE-BASED when an
-    # interleaved separate-process probe of the floor-recording commit
-    # itself cannot reproduce the floor within 1.5x — the recorded
-    # minimum then belongs to a host era, not to any plan this repo
-    # ever had, and every later round pays a fictitious ratio for it.
-    # New floor := min of the interleaved per-tree probe medians (both
-    # trees), the best REPRODUCIBLE time.  Records from rounds at or
-    # before the re-base round are clamped to the re-based value for
-    # these queries (they carry the unreproducible era); later rounds
-    # and this round's own medians can still lower the floor normally,
-    # so a genuine future speedup re-ratchets.  Probe data + method:
-    # SCALING.md "Round 16 — floor staleness".
-    FLOOR_REBASE_ASOF = 15
-    FLOOR_REBASE = {
-        "stream_tumbling_hourly": 1.351,
-        "doc_dataset_splits_stratified": 0.337,
-        "customer_zscore": 0.299,
-    }
-    for n, v in FLOOR_REBASE.items():
-        if n in floor and floor[n] < v:
-            floor[n] = v
-    if canonical:
-        import re as _re
-
-        for p in prev_files:
-            m = _re.search(r"r(\d+)", p.stem)
-            pre_rebase = bool(m) and int(m.group(1)) <= FLOOR_REBASE_ASOF
-            for n, t in _round_queries(p)[0].items():
-                if not isinstance(t, (int, float)):
-                    continue
-                if pre_rebase and n in FLOOR_REBASE:
-                    t = max(t, FLOOR_REBASE[n])
-                if n not in floor or t < floor[n]:
-                    floor[n] = t
     # This round's own MEDIANS feed the floor (not the per-pass
     # minimums): the floor is compared against medians, and a
     # median-vs-minimum ratio is structurally >= 1.0 — the same stat
@@ -591,9 +490,9 @@ def main() -> None:
     # Full payload (queries + min + secondary + ratios) goes to
     # BENCH_LOCAL.json; stdout gets a COMPACT contract line.  The
     # driver's tail capture keeps only 2000 chars of stdout — four
-    # rounds of the full payload came back "parsed: null", forcing the
-    # tail-mining archaeology above.  The contract fields (metric /
-    # value / unit / queries / sf) plus a floor geomean fit in ~1.4k.
+    # rounds of the full payload came back "parsed: null".  The
+    # contract fields (metric / value / unit / queries / sf) plus a
+    # floor geomean fit in ~1.4k.
     local_file = root / (
         "BENCH_LOCAL.json" if canonical else f"BENCH_LOCAL_sf{sf}.json"
     )

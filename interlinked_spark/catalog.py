@@ -10669,13 +10669,12 @@ def q_embedding_pq_rotated(e: DataFrame) -> DataFrame:
     and unrolls the same fit recurrence, so the rotated codes AND
     errors are value-hash-gated."""
     from .llm.embeddings import pq_encode, pq_fit, structured_rotation
-    from .operators.checkpointing import materialize
 
-    rot = materialize(
+    rot = (
         e.select(
             "vec_id", structured_rotation("embedding", KMEANS_D).alias("__rv")
-        ),
-        "local",
+        )
+        .localCheckpoint(eager=False)
     )
     books = pq_fit(rot, m=8, k=16, iters=2, vec_col="__rv", id_col="vec_id")
     return pq_encode(rot, books, vec_col="__rv", id_col="vec_id").select(

@@ -116,7 +116,6 @@ def dup_span_fraction(
     id_col: str = "doc_id",
     window: int = 8,
     divisor: int = 64,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Per-document duplicate-SPAN fraction: the share of a document's
     characters lying in chunks whose content also appears in at least
@@ -129,12 +128,9 @@ def dup_span_fraction(
     Chunk rows are checkpointed once and feed both the per-hash doc
     count and the join-back; both shuffles move (md5, len, id) only.
     Returns ``(doc_id, total_chars, dup_chars, dup_span_frac)``."""
-    from ..operators.checkpointing import materialize
-
-    ch = materialize(
-        content_chunks(df, text_col, id_col, window=window, divisor=divisor),
-        checkpoint_mode,
-    )
+    ch = content_chunks(
+        df, text_col, id_col, window=window, divisor=divisor
+    ).localCheckpoint(eager=False)
     counts = ch.groupBy("chunk_md5").agg(F.countDistinct("id").alias("__nd"))
     dup_len = F.when(F.col("__nd") > 1, F.col("chunk_len")).otherwise(F.lit(0))
     return (

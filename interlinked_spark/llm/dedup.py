@@ -26,7 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.aggregates import dedup_exact
-from ..operators.checkpointing import materialize
 from ..operators.diagnostics import drop_hot_buckets
 from ..operators.partitioning import spread
 
@@ -94,7 +93,6 @@ def minhash_signature_bands(
     shingle_n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    checkpoint_mode: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """The signature + banding front half of the MinHash pipeline,
     exposed so skew tooling can inspect the bucket-key distribution
@@ -170,7 +168,7 @@ def minhash_signature_bands(
     # Materialize the Arrow pipeline ONCE; the band explode, both sides
     # of the bucket self-join, and both shingle join-backs below all
     # derive from this checkpoint (see _posting_pair_counts note).
-    sig = materialize(sig, checkpoint_mode)
+    sig = sig.localCheckpoint(eager=False)
     # Band key = hash of the band's signature slice.  Explode ids ONLY:
     # the (band, bucket) shuffle and the bucket self-join move 3 longs
     # per row.  Carrying `sh` here would duplicate every document's full
@@ -198,7 +196,6 @@ def minhash_near_dup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     jaccard_threshold: float = 0.7,
-    checkpoint_mode: str = "local",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate pairs.
@@ -219,7 +216,7 @@ def minhash_near_dup_pairs(
     production run sizes that mass before paying for it.
     """
     sig, banded = minhash_signature_bands(
-        df, text_col, id_col, shingle_n, num_hashes, bands, checkpoint_mode
+        df, text_col, id_col, shingle_n, num_hashes, bands
     )
     if max_bucket_size is not None:
         # Hot-bucket cap — the band-join twin of ``max_shingle_df``: a
@@ -311,7 +308,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into
     ``bands`` chunks (pigeonhole: any pair within ``max_hamming < bands``
@@ -331,7 +327,7 @@ def simhash_near_dup_pairs(
             )
         ).alias("band", "chunk"),
     )
-    banded = materialize(banded, checkpoint_mode)  # compute signatures once
+    banded = banded.localCheckpoint(eager=False)  # compute signatures once
     l = banded.select("band", "chunk", F.col("id").alias("left_id"), F.col("simhash").alias("lh"))
     r = banded.select("band", "chunk", F.col("id").alias("right_id"), F.col("simhash").alias("rh"))
     return (
@@ -352,7 +348,6 @@ def _posting_pair_counts(
     keep: F.Column,
     keys: list[str],
     max_df: int | None,
-    checkpoint_mode: str,
     count_col: str = "common",
 ) -> DataFrame:
     """The posting self-join every overlap-counting pair operator here
@@ -377,7 +372,7 @@ def _posting_pair_counts(
     intermediate for that."""
     if max_df is not None:
         postings = drop_hot_buckets(postings, on, max_df)
-    postings = materialize(postings, checkpoint_mode)
+    postings = postings.localCheckpoint(eager=False)
     return (
         postings.select(*left)
         .join(postings.select(*right), on)
@@ -394,7 +389,6 @@ def _shingle_pair_counts(
     group_col: str | None,
     n: int,
     max_shingle_df: int | None,
-    checkpoint_mode: str,
 ) -> DataFrame:
     """``(left_id, right_id, lns, rns, common)`` for every undirected
     document pair (left < right) sharing >= 1 shingle — never all-pairs
@@ -414,7 +408,6 @@ def _shingle_pair_counts(
         keep=F.col("left_id") < F.col("right_id"),
         keys=["left_id", "right_id", "lns", "rns"],
         max_df=max_shingle_df,
-        checkpoint_mode=checkpoint_mode,
     )
 
 
@@ -426,7 +419,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing >=1 shingle
     (inverted-index self-join — never all-pairs).  Optional ``group_col``
@@ -444,7 +436,7 @@ def ngram_jaccard_pairs(
     A/B-tested against this counting join and lost at every measured
     scale (SCALING.md)."""
     pair_common = _shingle_pair_counts(
-        df, text_col, id_col, group_col, n, max_shingle_df, checkpoint_mode
+        df, text_col, id_col, group_col, n, max_shingle_df
     )
     jac = F.col("common") / (F.col("lns") + F.col("rns") - F.col("common"))
     return pair_common.filter(jac >= threshold).select(
@@ -459,7 +451,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.6,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Directed shingle-CONTAINMENT pairs (§2b-K): ``(src_id, dst_id,
     containment)`` where ``containment = |S_src ∩ S_dst| / |S_src| >=
@@ -477,9 +468,7 @@ def ngram_containment_pairs(
     documented recall trade (shared-capped-shingle pairs undercount
     ``common``).  The threshold compares the UNROUNDED ratio;
     ``containment`` rounds to 6dp."""
-    pair_common = _shingle_pair_counts(
-        df, text_col, id_col, None, n, max_shingle_df, checkpoint_mode
-    )
+    pair_common = _shingle_pair_counts(df, text_col, id_col, None, n, max_shingle_df)
     directed = pair_common.select(
         F.col("common"),
         F.explode(
@@ -512,7 +501,6 @@ def ngram_jaccard_incremental(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Incremental dedup — the production shape of daily corpus
     maintenance: match each NEW document against the already-accepted
@@ -528,9 +516,7 @@ def ngram_jaccard_incremental(
     quadratic blowup."""
     c = shingle_postings(corpus, text_col, id_col, n).withColumn("__new", F.lit(0))
     a = shingle_postings(new, text_col, id_col, n).withColumn("__new", F.lit(1))
-    return _incremental_match(
-        c.unionByName(a), threshold, max_shingle_df, checkpoint_mode
-    )
+    return _incremental_match(c.unionByName(a), threshold, max_shingle_df)
 
 
 def shingle_postings(
@@ -554,7 +540,6 @@ def _incremental_match(
     sizes: DataFrame,
     threshold: float,
     max_shingle_df: int | None,
-    checkpoint_mode: str,
 ) -> DataFrame:
     """Shared match stage of the incremental paths: posting rows
     ``(id, nsh, s, __new)`` in, ``(new_id, match_id, jaccard)`` out.
@@ -579,7 +564,6 @@ def _incremental_match(
         ),
         keys=["new_id", "match_id", "lns", "rns"],
         max_df=max_shingle_df,
-        checkpoint_mode=checkpoint_mode,
     )
     jac = F.col("common") / (F.col("lns") + F.col("rns") - F.col("common"))
     return pair_common.filter(jac >= threshold).select(
@@ -695,7 +679,6 @@ def ngram_jaccard_incremental_indexed(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
     new_postings: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`ngram_jaccard_incremental` against a MATERIALIZED corpus
@@ -719,7 +702,7 @@ def ngram_jaccard_incremental_indexed(
         new_postings = shingle_postings(new, text_col, id_col, n)
     new_sizes = new_postings.withColumn("__new", F.lit(1))
     return _incremental_match(
-        corpus_sizes.unionByName(new_sizes), threshold, max_shingle_df, checkpoint_mode
+        corpus_sizes.unionByName(new_sizes), threshold, max_shingle_df
     )
 
 
@@ -730,7 +713,6 @@ def near_dup_clusters(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: n-gram Jaccard pairs -> connected
     components -> every document labeled with the min doc id of its
@@ -741,11 +723,9 @@ def near_dup_clusters(
 
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, n=n, threshold=threshold,
-        max_shingle_df=max_shingle_df, checkpoint_mode=checkpoint_mode,
+        max_shingle_df=max_shingle_df,
     )
-    comp = connected_components(
-        pairs, "left_id", "right_id", checkpoint_mode=checkpoint_mode
-    )
+    comp = connected_components(pairs, "left_id", "right_id")
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp.withColumnRenamed("vertex", "id"), "id", "left")
@@ -763,7 +743,6 @@ def near_dup_keep_greedy(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """First-fit dedup policy: ``(id, kept)`` for every document, where
     a document is kept iff no KEPT smaller-id document is within
@@ -786,11 +765,10 @@ def near_dup_keep_greedy(
 
     pairs = ngram_jaccard_pairs(
         df, text_col, id_col, n=n, threshold=threshold,
-        max_shingle_df=max_shingle_df, checkpoint_mode=checkpoint_mode,
+        max_shingle_df=max_shingle_df,
     )
     return greedy_first_fit(
         pairs, df.select(id_col), v_col=id_col,
-        checkpoint_mode=checkpoint_mode,
     )
 
 
@@ -867,7 +845,6 @@ def winnow_match_pairs(
     window: int = 4,
     min_shared: int = 3,
     max_fingerprint_df: int | None = 1000,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints
     (§2b-K): the MOSS candidate-detection join — plagiarism / template
@@ -892,7 +869,6 @@ def winnow_match_pairs(
         keep=F.col("left_id") < F.col("right_id"),
         keys=["left_id", "right_id"],
         max_df=max_fingerprint_df,
-        checkpoint_mode=checkpoint_mode,
         count_col="shared_fps",
     ).filter(F.col("shared_fps") >= int(min_shared))
 

@@ -767,9 +767,7 @@ def semdedup_keep_assigned(
     # caller computes the result exactly once anyway, so the eager
     # localCheckpoint costs one pass it was about to pay regardless.
     if eager:
-        from ..operators.checkpointing import materialize
-
-        result = materialize(result, "local", eager=True)
+        result = result.localCheckpoint(eager=True)
         tagged.unpersist()
     return result
 
@@ -1198,14 +1196,13 @@ def ivfpq_fit(
         F.element_at(_centroid_literal(coarse), home_cid + 1)["c"],
         lambda x, c: x.cast("double") - c,
     )
-    from ..operators.checkpointing import materialize
 
     # Pin the residuals once: the coarse argmin (k x d literal fold)
     # would otherwise re-evaluate inside every one of the PQ fit's
     # scans (2 * iters + 1 of them) — identical codebooks either way,
     # the fit rounds just read checkpointed doubles instead.
-    resid_df = materialize(
-        df.select(F.col(id_col), resid.alias("__res")), "local"
+    resid_df = df.select(F.col(id_col), resid.alias("__res")).localCheckpoint(
+        eager=False
     )
     books = pq_fit(resid_df, m=m, k=k, iters=pq_iters, vec_col="__res", id_col=id_col)
     return coarse, books

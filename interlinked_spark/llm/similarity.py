@@ -344,7 +344,6 @@ def lsh_similarity_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     self_pairs: bool = False,
-    checkpoint_mode: str = "local",
     max_bucket_size: int | None = None,
     projections_per_band: int = 1,
 ) -> DataFrame:
@@ -396,8 +395,6 @@ def lsh_similarity_join(
     A coarse width shows up there as a large ``pair_mass`` long before
     any shuffle is paid; widen only if recall at the pinned
     ``num_hash_tables`` drops below target."""
-    from ..operators.checkpointing import materialize
-
     if self_pairs and queries is not corpus:
         # Candidates AND the exact-cosine verify arrays both come from
         # ``corpus`` on this path; a distinct ``queries`` frame would be
@@ -438,7 +435,7 @@ def lsh_similarity_join(
         return drop_hot_buckets(assign, ["entry", "bucket"], max_bucket_size)
 
     if self_pairs:
-        assign = materialize(cap(buckets(corpus, "neighbor_id")), checkpoint_mode)
+        assign = cap(buckets(corpus, "neighbor_id")).localCheckpoint(eager=False)
         cand = (
             assign.select("entry", "bucket", F.col("neighbor_id").alias("query_id"))
             .join(assign, ["entry", "bucket"])
@@ -500,7 +497,6 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_hash_tables: int = 6,
-    checkpoint_mode: str = "local",
     projections_per_band: int = 1,
     bucket_length: float = 0.5,
 ) -> DataFrame:
@@ -533,7 +529,6 @@ def embedding_near_dup_pairs(
         df, df, threshold_distance=max_dist, num_hash_tables=num_hash_tables,
         bucket_length=bucket_length,
         id_col=id_col, vec_col=vec_col, self_pairs=True,
-        checkpoint_mode=checkpoint_mode,
         projections_per_band=projections_per_band,
     )
     return (
@@ -942,7 +937,6 @@ def lsh_incremental_matches(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Match a NEW vector batch against the MATERIALIZED corpus index:
     band only the batch (parameters + dim from the stored meta), join
@@ -957,8 +951,6 @@ def lsh_incremental_matches(
     NOT emitted (use ``embedding_near_dup_pairs`` on the batch for
     that); id collisions between batch and corpus match the dedup
     convention — same id never matches itself."""
-    from ..operators.checkpointing import materialize
-
     meta = spark.read.parquet(f"{index_path}/meta").first()
     batch_dim = _check_index_dim(meta, new, vec_col, "lsh_incremental_matches")
     new_assigns = _lsh_assignments(
@@ -982,7 +974,7 @@ def lsh_incremental_matches(
             corpus_assigns, ["entry", "bucket"], max_bucket_size
         )
     cand = (
-        materialize(new_assigns, checkpoint_mode)
+        new_assigns.localCheckpoint(eager=False)
         .join(corpus_assigns, ["entry", "bucket"])
         .filter(F.col("new_id") != F.col("match_id"))
         .select("new_id", "match_id")
@@ -1011,7 +1003,6 @@ def vector_gate_rejections(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int | None = None,
-    checkpoint_mode: str = "local",
     meta=None,
     batch_dim=_UNPROBED,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1034,8 +1025,6 @@ def vector_gate_rejections(
     Candidate generation is bucket-equi-join only; the decision boundary
     is always the exact cosine recomputed from raw vectors (same
     contract as every LSH path in this module)."""
-    from ..operators.checkpointing import materialize
-
     # Gate-shape fast path: the caller may hold the (immutable once
     # dim-pinned) meta row and may have probed this batch's dim already
     # — skip the per-batch meta read / second limit(1) probe then.
@@ -1043,7 +1032,7 @@ def vector_gate_rejections(
         meta = spark.read.parquet(f"{index_path}/meta").first()
     if batch_dim is _UNPROBED:
         batch_dim = _check_index_dim(meta, batch, vec_col, "vector_gate_rejections")
-    assigns = materialize(
+    assigns = (
         _lsh_assignments(
             batch,
             int(meta.num_hash_tables),
@@ -1055,8 +1044,8 @@ def vector_gate_rejections(
             # the gate probed this batch's dim at the top — skip the
             # banding model's own per-batch limit(1) probe job
             dim=batch_dim if isinstance(batch_dim, int) else None,
-        ),
-        checkpoint_mode,
+        )
+        .localCheckpoint(eager=False)
     )
     new_side = assigns.select(F.col("id").alias("new_id"), "entry", "bucket")
 
@@ -1152,8 +1141,6 @@ def mmr_select(
     guard-contract pattern).
 
     Returns ``(rank, vec_id, relevance, mmr_score)``, rank 1..k."""
-    from ..operators.checkpointing import materialize
-
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
     if int(k) > int(max_k):
@@ -1169,7 +1156,7 @@ def mmr_select(
     # materialize ONCE: every greedy round reads the scored frame, and
     # without this the relevance scan re-executes k times (measured
     # 5.7s -> the scan dominates at sf0.1)
-    scored = materialize(
+    scored = (
         vectors.join(
             F.broadcast(query.select(F.col(vec_col).alias("__qv")))
         ).select(
@@ -1178,8 +1165,8 @@ def mmr_select(
             F.round(
                 cosine_similarity(F.col(vec_col), F.col("__qv")), round_dp
             ).alias("__rel"),
-        ),
-        "local",
+        )
+        .localCheckpoint(eager=False)
     )
     first = (
         scored.orderBy(F.col("__rel").desc(), F.col("id").asc())
@@ -1235,7 +1222,7 @@ def mmr_select(
         # greedy work done so far executes once here instead of at the
         # end — no repeated computation, only a truncated plan.
         if checkpoint_every and r < int(k) and (r - 1) % int(checkpoint_every) == 0:
-            selected = materialize(selected, "local")
+            selected = selected.localCheckpoint(eager=False)
     return selected.select(
         "rank",
         F.col("id").alias("vec_id"),

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from .checkpointing import materialize
-
 
 def _adaptive_parts(df: DataFrame, n_rows: int, rows_per_partition: int) -> int:
     """Loop-frame partition count sized to a MEASURED row count (same
@@ -37,17 +35,14 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    checkpoint_mode: str = "local",
     exact_convergence: bool = False,
     rows_per_partition: int = 2_000_000,
 ) -> DataFrame:
     """Label each vertex of the undirected graph with the MINIMUM vertex
     id reachable from it.  Returns ``(vertex, component)``.
 
-    ``checkpoint_mode="reliable"`` writes each round's labels to the
-    session checkpoint dir instead of executor-local storage — at 100 TB
-    an executor loss under ``"local"`` replays every completed round
-    (see ``operators/checkpointing.py``).
+    Each round's labels are cut with an executor-local checkpoint
+    (``localCheckpoint``), so the lineage stays one round deep.
 
     ``exact_convergence=True`` replaces the non-integral-id checksum
     (probabilistic: a changed round is missed only if 64-bit xxhash
@@ -62,29 +57,22 @@ def connected_components(
     (diameter bound; near-dup graphs converge in a handful)."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # The edge count rides the distinct-materialization job itself on
-    # the local path (same Observation pattern as the per-round
-    # checksum below — one fewer action; under AQE every action is
-    # 2-4 stage-batch jobs, so fused scalars are worth more than one
-    # job each).  The reliable path keeps the explicit count.
-    if checkpoint_mode == "local":
-        obs_e = Observation("cc_edge_count")
-        e = materialize(
-            e.distinct().observe(obs_e, F.count(F.lit(1)).alias("n")),
-            checkpoint_mode,
-            eager=True,
-        )
-        n_edges = int(obs_e.get["n"])
-    else:
-        e = materialize(e.distinct(), checkpoint_mode)
-        n_edges = e.count()  # one scalar over the checkpointed frame
+    # The edge count rides the distinct-materialization job itself
+    # (same Observation pattern as the per-round checksum below — one
+    # fewer action; under AQE every action is 2-4 stage-batch jobs, so
+    # fused scalars are worth more than one job each).
+    obs_e = Observation("cc_edge_count")
+    e = e.distinct().observe(obs_e, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    n_edges = int(obs_e.get["n"])
     n_parts = _adaptive_parts(e, n_edges, rows_per_partition)
     if n_parts < e.rdd.getNumPartitions():
         # Re-lay the edge frame once so every round's join scans
         # n_parts tasks instead of the original shuffle width — the
         # rounds ARE the cost of this operator (tiny-graph measurement:
         # the 32-task per-stage scheduling dominated end-to-end time).
-        e = materialize(e.repartition(n_parts, "a"), checkpoint_mode)
+        e = e.repartition(n_parts, "a").localCheckpoint(eager=False)
 
     # repartition BEFORE the distinct: hashpartitioning(vertex, n_parts)
     # satisfies the aggregate's clustering, so the label frame pays ONE
@@ -113,14 +101,6 @@ def connected_components(
         "byte", "short", "integer", "long"
     )
 
-    def _checksum(lbl: DataFrame):
-        col = (
-            F.col("component").cast("decimal(38,0)")
-            if numeric
-            else F.xxhash64("vertex", "component").cast("decimal(38,0)")
-        )
-        return lbl.agg(F.sum(col).alias("s")).collect()[0]["s"]
-
     def _diff_count(old: DataFrame, new: DataFrame) -> int:
         # Exact change detection: keyed join + pointwise compare — one
         # extra shuffle per round, immune to hash-delta cancellation.
@@ -133,12 +113,8 @@ def connected_components(
         )
 
     use_checksum = numeric or not exact_convergence
-    # The checksum normally rides the materialization action itself
-    # (Observation / CollectMetrics): zero extra jobs per round.  On
-    # the "reliable" path checkpoint() may run more than one internal
-    # job over the plan; the separate-collect fallback keeps the
-    # convergence read unambiguous there.
-    observe_checksum = use_checksum and checkpoint_mode == "local"
+    # The checksum rides the materialization action itself
+    # (Observation / CollectMetrics): zero extra jobs per round.
     checksum_col = (
         F.col("component").cast("decimal(38,0)")
         if numeric
@@ -147,17 +123,14 @@ def connected_components(
     # The INITIAL checksum rides the label materialization the same way
     # each round's rides its own (one fused action instead of
     # materialize + collect).
-    if observe_checksum:
+    if use_checksum:
         obs0 = Observation("cc_round_init")
-        labels = materialize(
-            labels_plan.observe(obs0, F.sum(checksum_col).alias("s")),
-            checkpoint_mode,
-            eager=True,
-        )
+        labels = labels_plan.observe(
+            obs0, F.sum(checksum_col).alias("s")
+        ).localCheckpoint(eager=True)
         prev_sum = obs0.get["s"]
     else:
-        labels = materialize(labels_plan, checkpoint_mode)
-        prev_sum = _checksum(labels) if use_checksum else None
+        labels = labels_plan.localCheckpoint(eager=False)
     for rnd in range(max_iterations):
         nbr_min = (
             e.join(labels.select(F.col("vertex").alias("a"), "component"), "a")
@@ -168,17 +141,13 @@ def connected_components(
             .groupBy("vertex")
             .agg(F.min("component").alias("component"))
         )
-        obs = None
-        if observe_checksum:
+        if use_checksum:
             obs = Observation(f"cc_round_{rnd}")
             plan = plan.observe(obs, F.sum(checksum_col).alias("s"))
-        new_labels = materialize(
-            plan,
-            checkpoint_mode,
-            eager=True,  # flatten lineage before the convergence check
-        )
+        # eager: flatten lineage before the convergence check
+        new_labels = plan.localCheckpoint(eager=True)
         if use_checksum:
-            new_sum = obs.get["s"] if obs is not None else _checksum(new_labels)
+            new_sum = obs.get["s"]
             changed = new_sum != prev_sum
             prev_sum = new_sum
         else:
@@ -196,7 +165,6 @@ def greedy_first_fit(
     left: str = "left_id",
     right: str = "right_id",
     max_iterations: int = 50,
-    checkpoint_mode: str = "local",
     rows_per_partition: int = 2_000_000,
 ) -> DataFrame:
     """Greedy maximal independent set in vertex-id order — the
@@ -245,19 +213,13 @@ def greedy_first_fit(
         F.greatest(F.col(left), F.col(right)).alias("d"),
         F.least(F.col(left), F.col(right)).alias("e"),
     ).filter(F.col("d") != F.col("e"))
-    # Edge count rides the materialization job on the local path (see
+    # Edge count rides the materialization job (see
     # connected_components — one fused action instead of two).
-    if checkpoint_mode == "local":
-        obs_e = Observation("mis_edge_count")
-        earlier = materialize(
-            earlier_plan.observe(obs_e, F.count(F.lit(1)).alias("n")),
-            checkpoint_mode,
-            eager=True,
-        )
-        n_edges = int(obs_e.get["n"])
-    else:
-        earlier = materialize(earlier_plan, checkpoint_mode)
-        n_edges = earlier.count()
+    obs_e = Observation("mis_edge_count")
+    earlier = earlier_plan.observe(
+        obs_e, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint(eager=True)
+    n_edges = int(obs_e.get["n"])
     # An edge set Spark would broadcast anyway is cheaper to resolve on
     # the driver than by rounds of jobs (same byte gate as pagerank).
     est_bytes = n_edges * _estimated_row_bytes(earlier.schema)
@@ -267,22 +229,18 @@ def greedy_first_fit(
     if n_parts < earlier.rdd.getNumPartitions():
         # One-time re-lay so per-round stages run n_parts tasks (the
         # rounds are the cost; see connected_components).
-        earlier = materialize(earlier.repartition(n_parts, "e"), checkpoint_mode)
+        earlier = earlier.repartition(n_parts, "e").localCheckpoint(eager=False)
     # st: 0 unknown, 1 kept, -1 rejected.  repartition BEFORE the
     # distinct (one exchange, not two — see connected_components).
-    status = materialize(
+    status = (
         vertices.select(F.col(v_col).alias("v"))
         .repartition(n_parts, "v")
         .distinct()
-        .withColumn("st", F.lit(0)),
-        checkpoint_mode,
+        .withColumn("st", F.lit(0))
+        .localCheckpoint(eager=False)
     )
     # The unresolved count rides the materialization action itself
-    # (Observation) on the local path — no separate per-round probe
-    # job; the reliable path keeps the explicit limit-probe
-    # (checkpoint() may run more than one internal job over the
-    # observed plan).
-    observe_count = checkpoint_mode == "local"
+    # (Observation) — no separate per-round probe job.
     for rnd in range(max_iterations):
         nb = (
             earlier.join(
@@ -308,19 +266,11 @@ def greedy_first_fit(
                 .alias("st"),
             )
         )
-        obs = None
-        if observe_count:
-            obs = Observation(f"mis_round_{rnd}")
-            plan = plan.observe(
-                obs, F.sum((F.col("st") == 0).cast("int")).alias("unresolved")
-            )
-        status = materialize(plan, checkpoint_mode, eager=True)
-        unresolved = (
-            obs.get["unresolved"]
-            if obs is not None
-            else status.filter(F.col("st") == 0).limit(1).count()
-        )
-        if not unresolved:
+        obs = Observation(f"mis_round_{rnd}")
+        status = plan.observe(
+            obs, F.sum((F.col("st") == 0).cast("int")).alias("unresolved")
+        ).localCheckpoint(eager=True)
+        if not obs.get["unresolved"]:
             return status.select(F.col("v").alias(v_col), (F.col("st") == 1).alias("kept"))
     raise RuntimeError(f"greedy_first_fit did not converge in {max_iterations} iterations")
 
@@ -406,7 +356,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_mode: str = "local",
     checkpoint_every: int = 2,
     rows_per_partition: int = 2_000_000,
     broadcast_weight_rows: int = 5_000_000,
@@ -474,11 +423,11 @@ def pagerank(
     # One materialized pass produces the deduped edge list AND the
     # 1/outdeg(src) weight (window over the same frame) — previously a
     # separate weights self-join cost its own materialization job.
-    ew = materialize(
+    ew = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .distinct()
-        .withColumn("w", 1.0 / F.count("*").over(Window.partitionBy("s"))),
-        checkpoint_mode,
+        .withColumn("w", 1.0 / F.count("*").over(Window.partitionBy("s")))
+        .localCheckpoint(eager=False)
     )
     n_edges = ew.count()  # one scalar over the checkpointed frame
     sess = ew.sparkSession
@@ -491,13 +440,13 @@ def pagerank(
     # out-edges) — the set is fixed across rounds, only its rank mass
     # changes, so the per-round dangling mass is derived from the rank
     # frame itself instead of a distinct + anti-join per round.
-    verts = materialize(
+    verts = (
         ew.select(F.col("s").alias("vertex"), F.lit(1).alias("__o"))
         .unionByName(ew.select(F.col("d").alias("vertex"), F.lit(0).alias("__o")))
         .groupBy("vertex")
         .agg((F.max("__o") == 1).alias("__out"))
-        .repartition(n_parts, "vertex"),
-        checkpoint_mode,
+        .repartition(n_parts, "vertex")
+        .localCheckpoint(eager=False)
     )
     n = verts.count()  # one scalar, once — iteration bodies stay lazy
     weights = ew.select("s", "d", "w")
@@ -593,7 +542,7 @@ def pagerank(
         if (
             checkpoint_every > 0 and it % checkpoint_every == 0
         ) or it == iterations:
-            pr = materialize(pr, checkpoint_mode)
+            pr = pr.localCheckpoint(eager=False)
     return pr.select("vertex", F.col("pr").alias("pagerank"))
 
 
@@ -721,7 +670,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 4,
-    checkpoint_mode: str = "local",
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration synchronous label propagation (Raghavan et al.
@@ -749,13 +697,13 @@ def label_propagation(
     Returns ``(vertex, community)``."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    und = materialize(
+    und = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(
             edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
         )
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
+        .localCheckpoint(eager=False)
     )
     labels = und.select(F.col("s").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
@@ -775,7 +723,7 @@ def label_propagation(
             .select("v", "lbl")
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = materialize(labels, checkpoint_mode)
+            labels = labels.localCheckpoint(eager=False)
     return labels.select(F.col("v").alias("vertex"), F.col("lbl").alias("community"))
 
 
@@ -811,7 +759,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 4,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Fixed-iteration k-core peel (§2b iterative family): repeatedly
     drop vertices of degree < ``k`` (and their edges) — the standard
@@ -832,11 +779,11 @@ def k_core(
     with their degree in the FINAL surviving subgraph."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    und = materialize(
+    und = (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct(),
-        checkpoint_mode,
+        .distinct()
+        .localCheckpoint(eager=False)
     )
     cur = und
     for i in range(int(iterations)):
@@ -852,7 +799,7 @@ def k_core(
             .select("s", "d")
         )
         if (i + 1) % 2 == 0 and i + 1 < iterations:
-            cur = materialize(cur, checkpoint_mode)
+            cur = cur.localCheckpoint(eager=False)
     return (
         cur.groupBy("s")
         .agg(F.count("*").cast("bigint").alias("degree"))

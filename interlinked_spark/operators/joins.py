@@ -18,7 +18,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .checkpointing import materialize
 from .partitioning import spread
 
 OnType = Union[str, Sequence[str], Column]
@@ -215,7 +214,6 @@ def _fuzzy_frames(
     dedupe_self: bool,
     max_qgram_df: Optional[int],
     prefix_filter: bool,
-    checkpoint_mode: str,
     same_side: bool = False,
     positional_filter: bool = False,
 ):
@@ -307,17 +305,16 @@ def _fuzzy_frames(
     # Each gram frame feeds BOTH the posting explode and the exact-
     # Jaccard verify join; without truncation the base scan + normalize
     # + shingle lineage re-runs for each consumer (twice per side — at
-    # 100 TB the scan IS the cost).  Same policy as the dedup family
-    # (llm/dedup.py): localCheckpoint by default, "reliable" on a real
-    # cluster (see operators/checkpointing.py for the trade).
-    lg = materialize(gram_frame(left, left_col, left_id), checkpoint_mode)
+    # 100 TB the scan IS the cost).  Same executor-local checkpoint as
+    # the dedup family (llm/dedup.py).
+    lg = gram_frame(left, left_col, left_id).localCheckpoint(eager=False)
     # same_side: right is the SAME relation as left (self-join) — its
     # gram frame is a rename of the materialized left one, so the
     # corpus is scanned + shingled + checkpointed ONCE, not twice.
     rg = (
         lg.withColumnRenamed(left_id, right_id)
         if same_side
-        else materialize(gram_frame(right, right_col, right_id), checkpoint_mode)
+        else gram_frame(right, right_col, right_id).localCheckpoint(eager=False)
     )
     lpost, rpost = postings(lg, left_id, "l"), postings(rg, right_id, "r")
     if max_qgram_df is not None:
@@ -362,7 +359,6 @@ def fuzzy_candidate_stats(
     max_qgram_df: Optional[int] = None,
     prefix_filter: bool = True,
     same_side: bool = False,
-    checkpoint_mode: str = "local",
     positional_filter: bool = False,
 ) -> dict:
     """Diagnostic twin of :func:`fuzzy_string_join`: instead of the
@@ -377,7 +373,7 @@ def fuzzy_candidate_stats(
     _lg, _rg, lpost, rpost, cand = _fuzzy_frames(
         left, right, left_col, right_col, left_id, right_id,
         threshold, q, extra, dedupe_self, max_qgram_df, prefix_filter,
-        checkpoint_mode, same_side, positional_filter,
+        same_side, positional_filter,
     )
     return {
         "postings_left": lpost.count(),
@@ -403,7 +399,6 @@ def fuzzy_string_join(
     max_qgram_df: Optional[int] = None,
     prefix_filter: bool = True,
     same_side: bool = False,
-    checkpoint_mode: str = "local",
     positional_filter: bool = False,
 ) -> DataFrame:
     """Entity-resolution fuzzy join: pairs of rows whose strings match
@@ -444,8 +439,8 @@ def fuzzy_string_join(
     doubles — small-integer numerator/denominator), so the boundary
     cannot flip across engines.
 
-    Each side's gram frame is materialized (``checkpoint_mode``, same
-    knob as the dedup family) because it feeds both the posting explode
+    Each side's gram frame is checkpointed (``localCheckpoint``, as
+    in the dedup family) because it feeds both the posting explode
     and the verification join — one base scan + shingle pass per side
     instead of two.  ``same_side=True`` declares that ``right`` is the
     SAME relation as ``left`` (the self-join/dedupe shape): one gram
@@ -454,8 +449,7 @@ def fuzzy_string_join(
     lg, rg, _lpost, _rpost, cand = _fuzzy_frames(
         left, right, left_col, right_col, left_id, right_id,
         threshold, q, list(extra_on or []), dedupe_self,
-        max_qgram_df, prefix_filter, checkpoint_mode, same_side,
-        positional_filter,
+        max_qgram_df, prefix_filter, same_side, positional_filter,
     )
     extra = list(extra_on or [])
     cand = cand.select(left_id, right_id, *extra).distinct()
@@ -489,7 +483,6 @@ def _edit_frames(
     prefix_count: int,
     dedupe_self: bool,
     same_side: bool,
-    checkpoint_mode: str,
 ):
     """Shared candidate-generation pipeline for :func:`edit_distance_join`
     and :func:`edit_candidate_stats` — returns ``(lg, rg, lpost, rpost,
@@ -505,14 +498,14 @@ def _edit_frames(
         staged = spread(
             side.select(F.col(id_col), *extra, norm_string(col).alias("__s"))
         )
-        return materialize(
+        return (
             staged.select(
                 F.col(id_col), *extra,
                 F.col("__s"),
                 F.length("__s").alias("__len"),
                 _qgrams_of_norm("__s", q).alias("__gr"),
-            ).withColumn("__n", F.size("__gr")),
-            checkpoint_mode,
+            ).withColumn("__n", F.size("__gr"))
+            .localCheckpoint(eager=False)
         )
 
     lg = gram_frame(left, left_col, left_id)
@@ -660,7 +653,6 @@ def edit_candidate_stats(
     prefix_filter: bool = True,
     prefix_count: int = 1,
     same_side: bool = False,
-    checkpoint_mode: str = "local",
 ) -> dict:
     """Diagnostic twin of :func:`edit_distance_join` (the
     :func:`fuzzy_candidate_stats` analog, r12 verdict item 2): posting
@@ -672,7 +664,7 @@ def edit_candidate_stats(
     _lg, _rg, lpost, rpost, raw, cand, short = _edit_frames(
         left, right, left_col, right_col, left_id, right_id,
         int(max_distance), q, extra, max_qgram_df, prefix_filter,
-        int(prefix_count), dedupe_self, same_side, checkpoint_mode,
+        int(prefix_count), dedupe_self, same_side,
     )
     return {
         "postings_left": lpost.count(),
@@ -698,7 +690,6 @@ def edit_distance_join(
     prefix_filter: bool = True,
     prefix_count: int = 1,
     same_side: bool = False,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Edit-distance (Levenshtein) similarity join: pairs of rows whose
     NORMALIZED strings (:func:`norm_string`) are within ``max_distance``
@@ -758,7 +749,7 @@ def edit_distance_join(
     filters are all necessary conditions for ``ed <= d``.  Returns
     ``extra_on + (left_id, right_id, distance)``.  ``dedupe_self=True``
     keeps ``left_id < right_id`` (self-join case).  Gram frames are
-    materialized (``checkpoint_mode``) — they feed postings, the short
+    checkpointed (``localCheckpoint``) — they feed postings, the short
     band, and verification; ``same_side=True`` declares that ``right``
     is the SAME relation as ``left`` (self-join), so one gram frame is
     built and checkpointed and the other is a column rename of it —
@@ -768,7 +759,7 @@ def edit_distance_join(
     lg, rg, _lpost, _rpost, _raw, cand, short = _edit_frames(
         left, right, left_col, right_col, left_id, right_id,
         d, q, extra, max_qgram_df, prefix_filter, int(prefix_count),
-        dedupe_self, same_side, checkpoint_mode,
+        dedupe_self, same_side,
     )
     cand = cand.unionByName(short).distinct()
     verified = cand.join(
@@ -864,7 +855,6 @@ def soft_tfidf_self_join(
     extra_on: Optional[Sequence[str]] = None,
     max_token_df: Optional[int] = None,
     round_dp: int = 6,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """TF-IDF-weighted token-set cosine self-join (§2b-C): entity
     resolution where shared RARE tokens count and shared boilerplate
@@ -880,7 +870,7 @@ def soft_tfidf_self_join(
     ONE counting aggregate over posting collisions (same shape as the
     q-gram joins; the idf join adds one token-level aggregate + an
     equi-join, both token-cardinality-sized).  The weighted frame is
-    materialized once (``checkpoint_mode``) — it feeds both posting
+    checkpointed once (``localCheckpoint``) — it feeds both posting
     sides and the norm frame.  ``max_token_df`` drops postings for
     tokens above the df cap BEFORE the self-join (one broadcast
     anti-join): the O(df^2) viral-token candidate blowup is traded for
@@ -902,12 +892,12 @@ def soft_tfidf_self_join(
     )
     total = df.agg(F.count("*").alias("__N"))
     dfreq = toks.groupBy("__t").agg(F.count("*").alias("__df"))
-    w = materialize(
+    w = (
         toks.join(dfreq, "__t")
         .join(F.broadcast(total))
         .withColumn("__idf", F.log(F.col("__N") / F.col("__df")))
-        .select("__id", *extra, "__t", "__idf"),
-        checkpoint_mode,
+        .select("__id", *extra, "__t", "__idf")
+        .localCheckpoint(eager=False)
     )
     norms = w.groupBy("__id").agg(
         F.sqrt(F.sum(F.col("__idf") * F.col("__idf"))).alias("__nrm")
@@ -941,7 +931,7 @@ def soft_tfidf_self_join(
     )
 
 
-def _snm_global_rank(ranked: DataFrame, checkpoint_mode: str) -> DataFrame:
+def _snm_global_rank(ranked: DataFrame) -> DataFrame:
     """Global total-order rank over ``(__s, __id)`` WITHOUT a
     single-partition window — the two-phase distributed prefix sum
     (``llm/packing.py::global_running_sum`` keyed on strings): rows
@@ -958,11 +948,11 @@ def _snm_global_rank(ranked: DataFrame, checkpoint_mode: str) -> DataFrame:
     offsets = counts.select(
         "__bkt", F.coalesce(F.sum("__cnt").over(off_w), F.lit(0)).alias("__off")
     )
-    return materialize(
+    return (
         local.join(F.broadcast(offsets), "__bkt").withColumn(
             "__rk", F.col("__intra") + F.col("__off")
-        ),
-        checkpoint_mode,
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -1022,7 +1012,6 @@ def jaro_winkler_join(
     threshold: float = 0.9,
     bucket_chars: int = 2,
     round_dp: int = 6,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Sorted-neighborhood Jaro-Winkler ER self-join (§2b-C/I): the
     same O(n·w) SNM blocking as :func:`sorted_neighborhood_join`, but
@@ -1048,14 +1037,14 @@ def jaro_winkler_join(
     from pyspark.sql.functions import pandas_udf
 
     w = int(window)
-    ranked = materialize(
+    ranked = (
         df.select(
             F.col(id_col).alias("__id"),
             norm_string(col).alias("__s"),
-        ).withColumn("__bkt", F.substring("__s", 1, int(bucket_chars))),
-        checkpoint_mode,
+        ).withColumn("__bkt", F.substring("__s", 1, int(bucket_chars)))
+        .localCheckpoint(eager=False)
     )
-    ranked = _snm_global_rank(ranked, checkpoint_mode)
+    ranked = _snm_global_rank(ranked)
     blk = F.floor((F.col("__rk") - 1) / w)
     l = ranked.select(
         F.col("__id").alias("left_id"), F.col("__rk").alias("__lrk"),
@@ -1103,7 +1092,6 @@ def sorted_neighborhood_join(
     threshold: float = 0.5,
     bucket_chars: int = 2,
     round_dp: int = 6,
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) entity-resolution self-join (§2b-C):
     sort the corpus by the normalized string, pair every row with its
@@ -1133,7 +1121,7 @@ def sorted_neighborhood_join(
     rank_gap, jaccard)`` with ``jaccard >= threshold`` (unrounded
     compare, ``round_dp`` output)."""
     w = int(window)
-    ranked = materialize(
+    ranked = (
         spread(
             df.select(
                 F.col(id_col).alias("__id"), norm_string(col).alias("__s")
@@ -1141,10 +1129,10 @@ def sorted_neighborhood_join(
         )
         .select("__id", "__s", _qgrams_of_norm("__s", q).alias("__gr"))
         .withColumn("__n", F.size("__gr"))
-        .withColumn("__bkt", F.substring("__s", 1, int(bucket_chars))),
-        checkpoint_mode,
+        .withColumn("__bkt", F.substring("__s", 1, int(bucket_chars)))
+        .localCheckpoint(eager=False)
     )
-    ranked = _snm_global_rank(ranked, checkpoint_mode)
+    ranked = _snm_global_rank(ranked)
     blk = F.floor((F.col("__rk") - 1) / w)
     l = ranked.select(
         F.col("__id").alias("left_id"), F.col("__rk").alias("__lrk"),

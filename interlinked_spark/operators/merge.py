@@ -312,7 +312,6 @@ def golden_records(
     attr_cols: Sequence[str],
     left_col: str = "left_id",
     right_col: str = "right_id",
-    checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Entity-resolution SURVIVORSHIP (the golden-record step downstream
     of every match join in §2b-C): match pairs -> connected components
@@ -332,9 +331,7 @@ def golden_records(
     from .graph import connected_components
     from .windows import top_k_per_group
 
-    comp = connected_components(
-        pairs, left_col, right_col, checkpoint_mode=checkpoint_mode
-    )
+    comp = connected_components(pairs, left_col, right_col)
     tagged = (
         records.join(comp.withColumnRenamed("vertex", id_col), id_col, "left")
         .withColumn("entity_id", F.coalesce("component", F.col(id_col)))

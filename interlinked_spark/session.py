@@ -41,11 +41,6 @@ ENGINE_CONF: dict[str, str] = {
     # clustered table the engine writes.  Micros is the modern,
     # stats-bearing encoding every reader understands.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-    # Reliable checkpoints (operators/checkpointing.py mode="reliable")
-    # are never deleted by default; let the ContextCleaner remove them
-    # once their DataFrame is GC'd so iterative dedup pipelines don't
-    # leak one checkpoint dir per round on long-lived sessions.
-    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }

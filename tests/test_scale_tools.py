@@ -241,30 +241,6 @@ def test_lsh_hot_bucket_preflight_and_exact_prededup_fix(spark):
     assert before.pair_mass - after.pair_mass >= tables * clique_mass
 
 
-def test_checkpoint_modes_produce_identical_results(spark):
-    """VERDICT r6 item 4: `local` vs `reliable` checkpoint modes are a
-    recovery-cost trade ONLY — identical results on the same inputs, for
-    both connected_components and the minhash pipeline."""
-    from interlinked_spark.llm.dedup import minhash_near_dup_pairs
-    from interlinked_spark.operators.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20), (30, 31)],
-        "src int, dst int",
-    )
-    local = connected_components(edges, checkpoint_mode="local")
-    reliable = connected_components(edges, checkpoint_mode="reliable")
-    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, reliable.collect()))
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = minhash_near_dup_pairs(docs, checkpoint_mode="local")
-    b = minhash_near_dup_pairs(docs, checkpoint_mode="reliable")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-    with pytest.raises(ValueError):
-        connected_components(edges, checkpoint_mode="bogus")
-
-
 def test_minhash_max_bucket_size_cap(spark):
     """The band-join twin of max_shingle_df: with the cap below the
     200-doc clique's bucket size, the clique's (identical-signature)
@@ -740,12 +716,11 @@ def _check_greedy_orientation(spark):
     assert got == {3: True, 5: True, 7: False}
 
 
-@pytest.mark.parametrize("checkpoint_mode", ["local", "reliable"])
 @pytest.mark.parametrize("path", ["driver", "distributed"])
-def test_greedy_first_fit_input_shapes(spark, request, path, checkpoint_mode):
+def test_greedy_first_fit_input_shapes(spark, request, path):
     """Both resolution paths agree on duplicate vertex rows, vertices
-    absent from every edge, string ids and either checkpoint mode; one
-    row per distinct vertex comes out."""
+    absent from every edge and string ids; one row per distinct vertex
+    comes out."""
     from interlinked_spark.operators.graph import greedy_first_fit
 
     if path == "distributed":
@@ -753,7 +728,7 @@ def test_greedy_first_fit_input_shapes(spark, request, path, checkpoint_mode):
     # 1~2~3 chain keeps 1 and 3; 9 touches no edge; 2 and 9 repeat.
     edges = spark.createDataFrame([(1, 2), (3, 2)], ["left_id", "right_id"])
     verts = spark.createDataFrame([(1,), (2,), (2,), (3,), (9,), (9,)], ["vertex"])
-    out = greedy_first_fit(edges, verts, checkpoint_mode=checkpoint_mode)
+    out = greedy_first_fit(edges, verts)
     assert ("__rej" in physical_plan(out)) == (path == "driver")
     assert sorted(map(tuple, out.collect())) == [
         (1, True), (2, False), (3, True), (9, True)
@@ -764,27 +739,35 @@ def test_greedy_first_fit_input_shapes(spark, request, path, checkpoint_mode):
         [("b", "a"), ("c", "b"), ("a", "d")], ["left_id", "right_id"]
     )
     verts = spark.createDataFrame([(v,) for v in "abcde"], ["doc"])
-    out = greedy_first_fit(edges, verts, v_col="doc", checkpoint_mode=checkpoint_mode)
+    out = greedy_first_fit(edges, verts, v_col="doc")
     assert dict(map(tuple, out.collect())) == {
         "a": True, "b": False, "c": True, "d": False, "e": True
     }
 
 
-def test_near_dup_keep_greedy_job_budget(spark):
-    """The first-fit dedup of the test documents builds in <= 6 Spark
-    jobs: the near-dup graph is small enough to resolve on the driver
-    instead of by rounds of join + aggregate jobs (17 jobs)."""
-    from interlinked_spark.llm.dedup import near_dup_keep_greedy
+@pytest.mark.parametrize(
+    "operator, budget",
+    [("near_dup_keep_greedy", 6), ("near_dup_clusters", 17)],
+    ids=["near_dup_keep_greedy", "near_dup_clusters"],
+)
+def test_near_dup_keep_greedy_job_budget(spark, operator, budget):
+    """Build job budgets of the dedup loop operators on the test
+    documents.  First-fit builds in <= 6 jobs: the near-dup graph is
+    small enough to resolve on the driver instead of by rounds of join +
+    aggregate jobs (17 jobs).  The connected-components rounds of
+    ``near_dup_clusters`` take 17: the edge count and every round's
+    convergence checksum ride the checkpoint jobs (Observation)."""
+    from interlinked_spark.llm import dedup
 
     sc = spark.sparkContext
-    group = "test:near_dup_keep_greedy_job_budget"
+    group = f"test:{operator}_job_budget"
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sc.setJobGroup(group, "job budget")
     try:
-        near_dup_keep_greedy(docs)
+        getattr(dedup, operator)(docs)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= budget
 
 
 def test_shingle_udf_evaluated_once(spark):
