@@ -15,7 +15,7 @@ from interlinked_spark import Workflow
 from interlinked_spark.llm import exact_text_dedup, near_dup_clusters, token_stats
 from interlinked_spark.llm.text import flag_contaminated, quality_scores, repetition_signals
 from interlinked_spark.operators.sampling import hash_sample
-from interlinked_spark.session import get_spark
+from interlinked_spark.session import get_spark, scratch_dir
 
 wkf = Workflow("llm-pipeline", base_kw={"base_dir": "/root/testdata/sf0.001"})
 
@@ -150,11 +150,9 @@ def dedup_index(d):
     corpus's inverted shingle index, built once per run and memoized —
     tomorrow's batches match against THIS, never re-shingling the
     corpus (`dedup.build_shingle_index` / `update_shingle_index`)."""
-    import tempfile
-
     from interlinked_spark.llm.dedup import build_shingle_index
 
-    path = tempfile.mkdtemp(prefix="llm_pipeline_idx_")
+    path = scratch_dir("llm_pipeline_idx_")
     build_shingle_index(d, path, num_files=4)
     return path
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .workflow import Workflow
+from .session import scratch_dir
 from .sources.readers import table_provider
 from .operators import sampling
 from .operators import (
@@ -1898,10 +1899,9 @@ def _stage_id_ordered_files(df: DataFrame, key_col: str, n_files: int) -> str:
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
-    staged = tempfile.mkdtemp(prefix="stream_docs_")
+    staged = scratch_dir("stream_docs_")
     lo, hi = df.agg(F.min(key_col), F.max(key_col)).first()
     step = (int(hi) - int(lo)) // n_files + 1
     t0 = time.time() - 2 * n_files
@@ -1910,7 +1910,7 @@ def _stage_id_ordered_files(df: DataFrame, key_col: str, n_files: int) -> str:
     # lands wholly in one task (=> exactly one part file per bucket
     # directory), sort within partitions so file contents are
     # deterministic id-ascending regardless of shuffle fetch order.
-    tmp = tempfile.mkdtemp(prefix="stage_part_")
+    tmp = scratch_dir("stage_part_")
     (
         df.withColumn(
             "__b",
@@ -2400,11 +2400,9 @@ def _vector_index(e: DataFrame) -> str:
     parameter meta for the corpus side (vec_id % 5 != 0), built once
     per run and memoized — the embedding counterpart of
     ``dedup_index.{n}`` (`llm/similarity.build_vector_index`)."""
-    import tempfile
-
     from .llm.similarity import build_vector_index
 
-    path = tempfile.mkdtemp(prefix="vector_idx_")
+    path = scratch_dir("vector_idx_")
     build_vector_index(
         e.filter(F.col("vec_id") % 5 != 0), path,
         num_hash_tables=12, bucket_length=0.5,
@@ -2480,8 +2478,6 @@ def q_dedup_incremental_compacted(d: DataFrame, spark: SparkSession) -> DataFram
     SAME recompute SQL as ``dedup_incremental_matches``: build + append
     + compact must be indistinguishable from a one-shot index, or the
     maintenance loop corrupts state."""
-    import tempfile
-
     from .llm.dedup import (
         build_shingle_index,
         ngram_jaccard_incremental_indexed,
@@ -2489,7 +2485,7 @@ def q_dedup_incremental_compacted(d: DataFrame, spark: SparkSession) -> DataFram
     )
     from .sources.writers import compact_table
 
-    path = tempfile.mkdtemp(prefix="shingle_idx_c_")
+    path = scratch_dir("shingle_idx_c_")
     build_shingle_index(d.filter(F.col("doc_id") % 4 == 1), path, num_files=4)
     update_shingle_index(d.filter(F.col("doc_id") % 4 == 2), path, num_files=4)
     update_shingle_index(d.filter(F.col("doc_id") % 4 == 3), path, num_files=4)
@@ -2519,12 +2515,10 @@ def q_zordered_scan_agg(spark: SparkSession, base_dir: str) -> DataFrame:
     sacrifices the other; span narrowing pinned in
     ``test_round5_ops.py``).  The path-based Delta/Iceberg
     ``OPTIMIZE ZORDER BY``."""
-    import tempfile
-
     from .sources.writers import write_zordered
 
     ev = spark.read.parquet(f"{base_dir}/events.parquet")
-    path = tempfile.mkdtemp(prefix="zorder_scan_")
+    path = scratch_dir("zorder_scan_")
     write_zordered(ev, path, ["user_id", "value"], n_files=8)
     back = spark.read.parquet(path).filter(
         F.col("user_id").between(100, 300) & F.col("value").between(10, 60)
@@ -2557,8 +2551,6 @@ def q_events_hll_state_distinct(spark: SparkSession, base_dir: str) -> DataFrame
     because Datasketches HLL union is register-wise max, so batching
     cannot change the registers.  A wrong estimate or a broken merge
     flips a boolean and fails the hash compare."""
-    import tempfile
-
     from .operators.sketches import (
         build_sketch_state,
         sketch_distinct_state,
@@ -2567,7 +2559,7 @@ def q_events_hll_state_distinct(spark: SparkSession, base_dir: str) -> DataFrame
     )
 
     ev = spark.read.parquet(f"{base_dir}/events.parquet")
-    path = tempfile.mkdtemp(prefix="hll_state_")
+    path = scratch_dir("hll_state_")
     build_sketch_state(
         ev.filter(F.col("event_id") % 2 == 0), ["event_type"], "user_id", path
     )
@@ -4566,11 +4558,9 @@ def _dedup_index(d: DataFrame, n: str) -> str:
     interlinked resource model applied to pipeline STATE rather than a
     query result.  Corpus = documents outside the synthetic new batch
     (doc_id % 4 != 0), mirroring ``dedup_incremental_matches``."""
-    import tempfile
-
     from .llm.dedup import build_shingle_index
 
-    path = tempfile.mkdtemp(prefix=f"shingle_idx_{n}_")
+    path = scratch_dir(f"shingle_idx_{n}_")
     build_shingle_index(d.filter(F.col("doc_id") % 4 != 0), path, n=int(n))
     return path
 
@@ -4635,12 +4625,10 @@ def q_csv_roundtrip_agg(li: DataFrame, spark: SparkSession) -> DataFrame:
     schema (never inferSchema at scale — schema inference is a second
     full scan), aggregate.  The aggregate must equal the parquet-direct
     oracle, proving the text codec path is lossless for these types."""
-    import tempfile
-
     from .sources.readers import read_table
     from .sources.writers import write_table
 
-    path = tempfile.mkdtemp(prefix="csv_rt_")
+    path = scratch_dir("csv_rt_")
     write_table(
         li.select("l_orderkey", "l_returnflag", "l_quantity"),
         path,
@@ -4702,12 +4690,10 @@ def q_jdbc_roundtrip_nations(n: DataFrame, spark: SparkSession) -> DataFrame:
     network — exactly local mode), read it back, aggregate.  Result
     must equal the parquet-direct oracle, proving the jdbc option
     plumbing end-to-end."""
-    import tempfile
-
     from .sources.readers import read_table
     from .sources.writers import write_table
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='jdbc_')}/db;create=true"
+    url = f"jdbc:derby:{scratch_dir('jdbc_')}/db;create=true"
     opts = {
         "url": url,
         "dbtable": "nations",
@@ -4737,11 +4723,9 @@ def q_partitioned_scan_agg(o: DataFrame, spark: SparkSession) -> DataFrame:
     partition — the filter prunes at the directory level
     (PartitionFilters, zero data files of other partitions touched),
     the layout move that turns a 100-TB scan into a 3-TB one."""
-    import tempfile
-
     from .sources.writers import write_table
 
-    path = tempfile.mkdtemp(prefix="part_scan_")
+    path = scratch_dir("part_scan_")
     write_table(o, path, partition_by=["o_orderstatus"])
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "O")
     return back.groupBy("o_orderpriority").agg(
@@ -4768,11 +4752,9 @@ def q_clustered_scan_agg(li: DataFrame, spark: SparkSession) -> DataFrame:
     min/max stats (the single-dimension Z-order move; file-level
     disjointness pinned in tests/test_round5_ops.py).  At 100 TB this
     is the layout for time-range queries on fact tables."""
-    import tempfile
-
     from .sources.writers import write_clustered
 
-    path = tempfile.mkdtemp(prefix="clustered_scan_")
+    path = scratch_dir("clustered_scan_")
     write_clustered(li, path, ["l_shipdate"], n_files=8)
     back = spark.read.parquet(path).filter(
         (F.col("l_shipdate") >= "1998-01-01") & (F.col("l_shipdate") < "1998-04-01")
@@ -4849,12 +4831,10 @@ def q_orc_roundtrip_agg(c: DataFrame, spark: SparkSession) -> DataFrame:
     columnar codec in the source matrix (schema preserved natively —
     unlike csv there is no re-declare step), aggregate must equal the
     parquet-direct oracle."""
-    import tempfile
-
     from .sources.readers import read_table
     from .sources.writers import write_table
 
-    path = tempfile.mkdtemp(prefix="orc_rt_")
+    path = scratch_dir("orc_rt_")
     write_table(c.select("c_custkey", "c_mktsegment", "c_acctbal"), path, fmt="orc")
     back = read_table(spark, path, fmt="orc")
     return back.groupBy("c_mktsegment").agg(
@@ -4875,13 +4855,11 @@ def q_json_roundtrip_agg(spark: SparkSession, base_dir: str) -> DataFrame:
     without the inference scan), aggregate == parquet-direct oracle.
     Timestamps ride as epoch longs — the lossless way through a text
     codec."""
-    import tempfile
-
     from .sources.readers import normalize_nanos, read_table
     from .sources.writers import write_table
 
     ev = normalize_nanos(spark.read.parquet(f"{base_dir}/events.parquet"))
-    path = tempfile.mkdtemp(prefix="json_rt_")
+    path = scratch_dir("json_rt_")
     write_table(
         ev.select("event_id", "event_type", "value", F.col("ts").cast("long").alias("ts_s")),
         path,
@@ -4910,11 +4888,9 @@ def q_text_source_tokens(d: DataFrame, spark: SparkSession) -> DataFrame:
     format raw corpus dumps arrive in.  Write document bodies as text,
     read back, count lines + whitespace tokens == computing directly on
     the table."""
-    import tempfile
-
     from .sources.writers import write_table
 
-    path = tempfile.mkdtemp(prefix="text_rt_")
+    path = scratch_dir("text_rt_")
     # newlines inside a document would split lines: encode them away
     write_table(
         d.select(F.regexp_replace("text", r"\n", " ").alias("value")), path, fmt="text"
@@ -5013,9 +4989,7 @@ def q_xml_roundtrip_agg(n: DataFrame, spark: SparkSession) -> DataFrame:
     rowTag-framed records, schema-on-read, aggregate == parquet-direct
     oracle — the last cell of the source-format matrix (parquet / csv /
     json / orc / text / jdbc / xml all driver-gated)."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="xml_rt_") + "/nation"
+    path = scratch_dir("xml_rt_") + "/nation"
     src = n.select("n_nationkey", "n_name", "n_regionkey")
     src.write.format("xml").option("rowTag", "nation").mode("overwrite").save(path)
     back = spark.read.format("xml").option("rowTag", "nation").load(path)
@@ -5261,12 +5235,10 @@ def _pack_state(d: DataFrame, cap: str) -> str:
     param): batch 0 (``doc_id % 4 != 0``) is packed into a fresh state
     dir once per run and memoized — the same resource-as-state pattern
     as ``dedup_index.{n}``."""
-    import tempfile
-
     from .llm.packing import init_packing_state, pack_incremental
     from .llm.text import token_stats
 
-    path = tempfile.mkdtemp(prefix=f"pack_state_{cap}_")
+    path = scratch_dir(f"pack_state_{cap}_")
     init_packing_state(d.sparkSession, path, capacity=int(cap))
     batch0 = token_stats(d.filter(F.col("doc_id") % 4 != 0)).select(
         "doc_id", "n_bpe_est"
@@ -7067,14 +7039,12 @@ def q_events_qhist_state_quantiles(spark: SparkSession, base_dir: str) -> DataFr
     rank statistic — a wrong bin, a drifted grid, or a broken append
     flips a boolean and fails the hash compare
     (`operators/sketches.py::qhist_build`)."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from .operators.sketches import qhist_bins, qhist_build, qhist_quantiles, qhist_update
 
     ev = spark.read.parquet(f"{base_dir}/events.parquet")
-    path = tempfile.mkdtemp(prefix="qhist_state_")
+    path = scratch_dir("qhist_state_")
     qhist_build(
         ev.filter(F.col("event_id") % 2 == 0), ["event_type"], "value", path,
         lo=QH_LO, hi=QH_HI, bins=QH_BINS,
@@ -7192,8 +7162,6 @@ def q_orders_price_ddsketch(spark: SparkSession, base_dir: str) -> DataFrame:
     the bucket index itself.  Engine-portability: ln(gamma) rides as a
     Python literal and the log-ratio rounds 6dp before ceil
     (`operators/sketches.py::ddsketch_buckets`)."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from .operators.sketches import (
@@ -7204,7 +7172,7 @@ def q_orders_price_ddsketch(spark: SparkSession, base_dir: str) -> DataFrame:
     )
 
     orders = spark.read.parquet(f"{base_dir}/orders.parquet")
-    path = tempfile.mkdtemp(prefix="ddsketch_state_")
+    path = scratch_dir("ddsketch_state_")
     ddsketch_build(
         orders.filter(F.col("o_orderkey") % 2 == 0),
         ["o_orderpriority"], "o_totalprice", path, alpha=DD_ALPHA,
@@ -10253,11 +10221,9 @@ def _ivfpq_index(e: DataFrame) -> str:
     fifth appended against the FROZEN codebooks — built once per run
     and memoized, the quantized counterpart of ``vector_index``
     (`llm/pq_index.build_ivfpq_index` / `append_ivfpq_index`)."""
-    import tempfile
-
     from .llm.pq_index import append_ivfpq_index, build_ivfpq_index
 
-    path = tempfile.mkdtemp(prefix="ivfpq_idx_")
+    path = scratch_dir("ivfpq_idx_")
     build_ivfpq_index(
         e.filter(F.col("vec_id") % 5 != 0), path,
         coarse_k=KMEANS_K, m=8, k=16,
@@ -10511,15 +10477,13 @@ def _ivfpq_index_takedown(e: DataFrame) -> str:
     held-out fifth minus the takedown set against the untouched
     codebooks — proving the append path survives a delete+compact.
     Final searchable corpus: every vector with vec_id % 7 != 0."""
-    import tempfile
-
     from .llm.pq_index import (
         append_ivfpq_index,
         build_ivfpq_index,
         delete_from_ivfpq_index,
     )
 
-    path = tempfile.mkdtemp(prefix="ivfpq_takedown_")
+    path = scratch_dir("ivfpq_takedown_")
     build_ivfpq_index(
         e.filter(F.col("vec_id") % 5 != 0), path,
         coarse_k=KMEANS_K, m=8, k=16,
@@ -10857,12 +10821,10 @@ def _maxsim_token_index(e: DataFrame) -> str:
     pinned in ``meta_tokens/`` — built once per run and memoized, the
     late-interaction counterpart of ``ivfpq_index``
     (`llm/pq_index.build_ivfpq_token_index`)."""
-    import tempfile
-
     from .llm.pq_index import build_ivfpq_token_index
     from .llm.similarity import explode_token_vectors
 
-    path = tempfile.mkdtemp(prefix="maxsim_tok_idx_")
+    path = scratch_dir("maxsim_tok_idx_")
     build_ivfpq_token_index(
         explode_token_vectors(e, 4), path, n_slices=4,
         coarse_k=KMEANS_K, m=2, k=16,

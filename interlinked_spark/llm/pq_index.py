@@ -275,6 +275,7 @@ def append_ivfpq_index(
     (:func:`ivfpq_index_codes` ``with_err=True``) so the drift monitor
     aggregates the already-materialized frame instead of re-encoding
     the batch twice."""
+    from ..sources.readers import read_parquet_if_present
     from ..sources.writers import write_table
 
     spark = new_vectors.sparkSession
@@ -338,11 +339,8 @@ def append_ivfpq_index(
     if batch_seq is not None:
         seq = int(batch_seq)
     else:
-        try:
-            prev = spark.read.parquet(f"{path}/append_stats")
-            seq = int(prev.agg(F.max("batch_seq")).first()[0]) + 1
-        except Exception:  # noqa: BLE001 - first append: no stats table yet
-            seq = 0
+        prev = read_parquet_if_present(spark, f"{path}/append_stats")
+        seq = 0 if prev is None else int(prev.agg(F.max("batch_seq")).first()[0]) + 1
     row = {
         "batch_seq": seq,
         "n": int(agg["n"]),

@@ -430,12 +430,7 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     n_edges = ew.count()  # one scalar over the checkpointed frame
-    sess = ew.sparkSession
-    try:
-        max_parts = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # noqa: BLE001 - conf lookup only tunes, never gates
-        max_parts = 200
-    n_parts = max(1, min(max_parts, -(-n_edges // max(1, rows_per_partition))))
+    n_parts = _adaptive_parts(ew, n_edges, rows_per_partition)
     # One aggregate builds the vertex set AND tags danglingness (no
     # out-edges) — the set is fixed across rounds, only its rank mass
     # changes, so the per-round dangling mass is derived from the rank
@@ -458,7 +453,7 @@ def pagerank(
     # remains as a belt-and-braces bound; either limit failing skips
     # the hint and leaves broadcast-vs-shuffle to AQE's observed sizes.
     est_bytes = n_edges * _estimated_row_bytes(weights.schema)
-    thresh = _auto_broadcast_threshold_bytes(sess)
+    thresh = _auto_broadcast_threshold_bytes(ew.sparkSession)
     # The byte cap is max(session threshold, broadcast_weight_bytes):
     # unlike a one-shot join, this broadcast is built ONCE and reused
     # every iteration, so its build cost amortizes over the loop and a

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 ENGINE_CONF: dict[str, str] = {
@@ -46,6 +47,18 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a path the engine makes up (sink, index,
+    state, staged source).  It lives under the session's SparkFiles
+    root, which Spark deletes at ``spark.stop()`` (or at JVM exit), so
+    DataFrames that read it lazily stay valid for the whole session.
+    One sub-directory, because Python workers put the root itself on
+    ``sys.path``."""
+    root = os.path.join(SparkFiles.getRootDirectory(), "interlinked")
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make ``interlinked_spark`` importable on executors.
 
@@ -62,18 +75,15 @@ def ship_package(spark: SparkSession) -> None:
     if getattr(sc, "_interlinked_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"interlinked_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for name in files:
-                    if not name.endswith(".py"):
-                        continue
-                    full = os.path.join(root, name)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
+    zip_path = os.path.join(scratch_dir("ship_"), "interlinked_spark.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for name in files:
+                if not name.endswith(".py"):
+                    continue
+                full = os.path.join(root, name)
+                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                zf.write(full, rel)
     sc.addPyFile(zip_path)
     sc._interlinked_shipped = True
 

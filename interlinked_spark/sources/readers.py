@@ -50,6 +50,23 @@ def scan_path(spark: SparkSession, base_dir: str, name: str, fmt: str = "parquet
     return read_table(spark, f"{base_dir}/{name}.{fmt if fmt != 'text' else 'txt'}", fmt, **options)
 
 
+def read_parquet_if_present(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """``spark.read.parquet(path)``, or ``None`` while ``path`` is missing
+    or holds no entry whose name does not start with ``_`` or ``.`` —
+    the state of an optional table before its first write.  The probe
+    goes through the path's Hadoop ``FileSystem`` (so remote paths
+    work) instead of a failed read, which Spark logs as an analysis
+    error with a full stack trace."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath) or not any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(jpath)
+    ):
+        return None
+    return spark.read.parquet(path)
+
+
 def normalize_nanos(df: DataFrame, cols: Sequence[str] = ("ts",)) -> DataFrame:
     """Normalize timestamp columns to plain TIMESTAMP (LTZ) regardless of
     how the parquet writer encoded them:

@@ -15,11 +15,14 @@ into workflow resources (each micro-batch is a normal DataFrame).
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scratch_dir
+from ..sources.readers import normalize_nanos, read_parquet_if_present
 
 
 def stream_from_parquet(
@@ -36,7 +39,7 @@ def stream_from_parquet(
     if os.path.isfile(path):
         # FileStreamSource needs a directory; stage single files via
         # symlink (read-only test fixtures stay untouched).
-        staged = tempfile.mkdtemp(prefix="stream_src_")
+        staged = scratch_dir("stream_src_")
         os.symlink(path, os.path.join(staged, os.path.basename(path)))
         path = staged
     stream = (
@@ -44,8 +47,6 @@ def stream_from_parquet(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )
-    from ..sources.readers import normalize_nanos
-
     return normalize_nanos(stream)
 
 
@@ -114,18 +115,6 @@ def stream_static_join(stream: DataFrame, static_dim: DataFrame, on, how: str = 
     return stream.join(F.broadcast(static_dim), on=on, how=how)
 
 
-def _discard_checkpoint(path: str) -> None:
-    """Remove a checkpoint dir the ENGINE created for a completed
-    availableNow replay.  These are single-use by construction (fresh
-    mkdtemp per drain — the deterministic-replay harness never resumes
-    them), so keeping them only leaks /tmp across bench/test runs.
-    Caller-supplied checkpoint locations are never touched — those are
-    the production resume points."""
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
 def run_available_now(
     result: DataFrame,
     sink_table: str,
@@ -135,7 +124,7 @@ def run_available_now(
     """Deterministic replay: drain everything available as micro-batches
     into an in-memory sink table, then stop.  The caller reads
     ``spark.table(sink_table)`` afterwards."""
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{sink_table}_")
+    ckpt = scratch_dir(f"ckpt_{sink_table}_")
     try:
         query = (
             result.writeStream.format("memory")
@@ -155,7 +144,7 @@ def run_available_now(
     finally:
         # Single-use by construction — discard on failure paths too, or
         # a flaky test retried in a loop leaks one dir per attempt.
-        _discard_checkpoint(ckpt)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def foreach_batch_into(
@@ -170,7 +159,7 @@ def foreach_batch_into(
     normal (batch) DataFrame, so it can write through any workflow sink
     or update downstream resources.  Runs with ``availableNow`` (drain
     everything, then stop) for deterministic replay."""
-    own_ckpt = None if checkpoint else tempfile.mkdtemp(prefix="ckpt_foreach_")
+    own_ckpt = None if checkpoint else scratch_dir("ckpt_foreach_")
     try:
         query = (
             stream_result.writeStream.foreachBatch(handler)
@@ -184,7 +173,7 @@ def foreach_batch_into(
             raise TimeoutError(f"foreachBatch drain did not finish within {timeout_s}s")
     finally:
         if own_ckpt:
-            _discard_checkpoint(own_ckpt)
+            shutil.rmtree(own_ckpt, ignore_errors=True)
     return query
 
 
@@ -201,7 +190,7 @@ def run_into_parquet(
     (:func:`run_available_now`) is a test-harness convenience only; this
     is the sink shape that survives 100 TB.  Returns the sink directory
     for ``spark.read.parquet`` read-back."""
-    path = path or tempfile.mkdtemp(prefix="stream_sink_")
+    path = path or scratch_dir("stream_sink_")
     mode = "overwrite" if output_mode == "complete" else "append"
 
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -236,20 +225,15 @@ def run_upsert_into_parquet(
 
     keys = list(keys)
     order_cols = list(order_cols)
-    path = path or tempfile.mkdtemp(prefix="stream_upsert_")
+    path = path or scratch_dir("stream_upsert_")
     spark = stream.sparkSession
 
     def upsert_batch(batch_df: DataFrame, _batch_id: int) -> None:
         batch_latest = keep_latest(batch_df, keys, order_cols).withColumn(
             "__ver", F.struct(*order_cols)
         )
-        from pyspark.errors import AnalysisException
-
-        try:
-            current = spark.read.parquet(path)
-        except AnalysisException:  # first batch: target doesn't exist yet
-            current = None
-        if current is None or not current.columns:
+        current = read_parquet_if_present(spark, path)
+        if current is None:  # first batch: no target yet
             merged = batch_latest
         else:
             # __ver is never persisted — re-derive it from the order
@@ -316,19 +300,14 @@ def run_scd2_into_parquet(
 
     keys = list(keys)
     tracked = list(tracked)
-    path = path or tempfile.mkdtemp(prefix="stream_scd2_")
+    path = path or scratch_dir("stream_scd2_")
     spark = stream.sparkSession
     if seed is not None:
         seed.write.mode("overwrite").parquet(path)
 
     def scd2_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        try:
-            current = spark.read.parquet(path)
-        except AnalysisException:  # unseeded first batch: empty history
-            current = None
-        if on_stale != "drop" and current is not None and current.columns:
+        current = read_parquet_if_present(spark, path)
+        if on_stale != "drop" and current is not None:
             anchor = current.filter(F.col("is_current")).select(
                 *keys, F.col("effective_from").alias("__anchor")
             )
@@ -354,7 +333,7 @@ def run_scd2_into_parquet(
                 import warnings
 
                 warnings.warn(msg, stacklevel=2)
-        if current is None or not current.columns:
+        if current is None:  # unseeded first batch: empty history
             current = (
                 batch_df.sparkSession.createDataFrame([], batch_df.schema)
                 .select(
@@ -610,8 +589,8 @@ def run_neardup_gate_into_parquet(
         update_shingle_index,
     )
 
-    accepted_path = accepted_path or tempfile.mkdtemp(prefix="neardup_accept_")
-    index_path = index_path or tempfile.mkdtemp(prefix="neardup_idx_")
+    accepted_path = accepted_path or scratch_dir("neardup_accept_")
+    index_path = index_path or scratch_dir("neardup_idx_")
     spark = doc_stream.sparkSession
     # Seed an EMPTY index (schema only) so batch one runs the same
     # indexed matcher as every later batch — no first-batch special
@@ -696,8 +675,8 @@ def run_vector_neardup_gate_into_parquet(
         vector_gate_rejections,
     )
 
-    accepted_path = accepted_path or tempfile.mkdtemp(prefix="vec_accept_")
-    index_path = index_path or tempfile.mkdtemp(prefix="vec_gate_idx_")
+    accepted_path = accepted_path or scratch_dir("vec_accept_")
+    index_path = index_path or scratch_dir("vec_gate_idx_")
     spark = vec_stream.sparkSession
     empty = spark.createDataFrame([], vec_stream.schema)
     build_vector_index(
@@ -791,8 +770,8 @@ def run_vector_neardup_pq_gate_into_parquet(
         load_ivfpq_index,
     )
 
-    accepted_path = accepted_path or tempfile.mkdtemp(prefix="vec_pq_accept_")
-    index_path = index_path or tempfile.mkdtemp(prefix="vec_pq_idx_")
+    accepted_path = accepted_path or scratch_dir("vec_pq_accept_")
+    index_path = index_path or scratch_dir("vec_pq_idx_")
     spark = vec_stream.sparkSession
     build_ivfpq_index(
         base_corpus, index_path, coarse_k=coarse_k, m=m, k=k,
@@ -874,7 +853,7 @@ def run_packing_into_state(
     from ..llm.packing import init_packing_state, pack_incremental
     from ..llm.text import token_stats
 
-    state_path = state_path or tempfile.mkdtemp(prefix="pack_state_stream_")
+    state_path = state_path or scratch_dir("pack_state_stream_")
     spark = doc_stream.sparkSession
     init_packing_state(spark, state_path, capacity)
 
@@ -916,7 +895,7 @@ def run_qhist_into_state(
     from ..operators.sketches import qhist_bins
     from ..sources.writers import write_single_file, write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="qhist_state_stream_")
+    state_path = state_path or scratch_dir("qhist_state_stream_")
     spark = event_stream.sparkSession
     keys = list(keys)
     meta = spark.createDataFrame(
@@ -925,8 +904,7 @@ def run_qhist_into_state(
     write_single_file(meta, f"{state_path}/meta")
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        m = spark.read.parquet(f"{state_path}/meta").first()
-        hist = qhist_bins(batch_df, keys, value_col, m.lo, m.hi, m.bins)
+        hist = qhist_bins(batch_df, keys, value_col, float(lo), float(hi), int(bins))
         write_table(
             hist.coalesce(1),
             f"{state_path}/state/batch={batch_id}",
@@ -961,7 +939,7 @@ def run_ddsketch_into_state(
     from ..operators.sketches import ddsketch_buckets
     from ..sources.writers import write_single_file, write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="ddsketch_state_stream_")
+    state_path = state_path or scratch_dir("ddsketch_state_stream_")
     spark = event_stream.sparkSession
     keys = list(keys)
     write_single_file(
@@ -970,8 +948,7 @@ def run_ddsketch_into_state(
     )
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        a = float(spark.read.parquet(f"{state_path}/meta").first().alpha)
-        sk = ddsketch_buckets(batch_df, keys, value_col, alpha=a)
+        sk = ddsketch_buckets(batch_df, keys, value_col, alpha=float(alpha))
         write_table(
             sk.coalesce(1),
             f"{state_path}/state/batch={batch_id}",
@@ -1009,15 +986,14 @@ def run_hll_into_state(
     from ..operators.sketches import sketch_distinct_state
     from ..sources.writers import write_single_file, write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="hll_state_stream_")
+    state_path = state_path or scratch_dir("hll_state_stream_")
     spark = event_stream.sparkSession
     keys = list(keys)
     meta = spark.createDataFrame([(int(lg_k),)], "lg_k int")
     write_single_file(meta, f"{state_path}/meta")
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        k = int(spark.read.parquet(f"{state_path}/meta").first().lg_k)
-        st = sketch_distinct_state(batch_df, keys, value_col, lg_k=k)
+        st = sketch_distinct_state(batch_df, keys, value_col, lg_k=int(lg_k))
         write_table(
             st.coalesce(1), f"{state_path}/state/batch={batch_id}", mode="overwrite"
         )
@@ -1060,20 +1036,15 @@ def run_budget_gate_into_parquet(
     — the catalog oracle.  Returns the target dir; read back with
     ``spark.read.parquet(path)`` (the ``batch`` partition column
     records the admitting micro-batch)."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.sampling import budget_select
 
-    path = path or tempfile.mkdtemp(prefix="stream_budget_")
+    path = path or scratch_dir("stream_budget_")
     spark = stream.sparkSession
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            committed = spark.read.parquet(path)
-        except AnalysisException:
-            committed = None
+        committed = read_parquet_if_present(spark, path)
         spent = None
-        if committed is not None and committed.columns:
+        if committed is not None:
             spent = (
                 committed.filter(F.col("batch") < batch_id)
                 .groupBy(group_col)
@@ -1123,13 +1094,12 @@ def run_transitions_into_state(
     skip micro-batches).  Answer by summing ``counts/batch=*``."""
     from ..sources.writers import write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="transitions_state_")
+    state_path = state_path or scratch_dir("transitions_state_")
     spark = event_stream.sparkSession
     keys = list(key_cols)
     order = list(order_cols)
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
         from pyspark.sql import Window
 
         seq = Window.partitionBy(*keys).orderBy(*order)
@@ -1156,10 +1126,9 @@ def run_transitions_into_state(
             .filter(F.col("__rn") == 1)
             .select(*keys, "__st")
         )
-        try:
-            prior = spark.read.parquet(f"{state_path}/last/batch={batch_id - 1}")
-        except AnalysisException:
-            prior = None
+        prior = read_parquet_if_present(
+            spark, f"{state_path}/last/batch={batch_id - 1}"
+        )
         if prior is not None:
             boundary = prior.select(
                 *keys, F.col("__st").alias("from_state")
@@ -1224,13 +1193,12 @@ def run_cusum_into_state(
     Answer by reading ``out/batch=*``."""
     from ..sources.writers import write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="cusum_state_")
+    state_path = state_path or scratch_dir("cusum_state_")
     spark = event_stream.sparkSession
     keys = list(key_cols)
     order = list(order_cols)
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
         from pyspark.sql import Window
 
         cum = (
@@ -1241,10 +1209,9 @@ def run_cusum_into_state(
         last_w = Window.partitionBy(*keys).orderBy(
             *[F.col(c).desc() for c in order]
         )
-        try:
-            prior = spark.read.parquet(f"{state_path}/state/batch={batch_id - 1}")
-        except AnalysisException:
-            prior = None
+        prior = read_parquet_if_present(
+            spark, f"{state_path}/state/batch={batch_id - 1}"
+        )
 
         batch = batch_df.select(*keys, *order, value_col)
         if prior is not None:
@@ -1363,12 +1330,10 @@ def run_span_dedup_into_state(
     )
     from ..sources.writers import write_table
 
-    state_path = state_path or tempfile.mkdtemp(prefix="span_dedup_state_")
+    state_path = state_path or scratch_dir("span_dedup_state_")
     spark = doc_stream.sparkSession
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         # batch_df is NOT checkpointed: each consumer (gram build, the
         # span-removal text scan) is one scan of a single-file
         # micro-batch — cheaper than a dedicated checkpoint job.  The
@@ -1376,14 +1341,9 @@ def run_span_dedup_into_state(
         grams_new = positional_kgram_postings(
             batch_df, text_col=text_col, id_col=id_col, k=k
         ).localCheckpoint(eager=True)
-        try:
-            seen = (
-                spark.read.parquet(f"{state_path}/grams")
-                .filter(F.col("batch") < batch_id)
-                .select("id", "pos", "h")
-            )
-        except AnalysisException:
-            seen = None
+        seen = read_parquet_if_present(spark, f"{state_path}/grams")
+        if seen is not None:
+            seen = seen.filter(F.col("batch") < batch_id).select("id", "pos", "h")
         allg = grams_new if seen is None else seen.unionByName(grams_new)
         if max_kgram_df is not None:
             from ..operators.diagnostics import drop_hot_buckets

@@ -435,7 +435,9 @@ class Run:
 
     def release(self) -> None:
         """Unpersist everything this run pinned (explicit, never automatic:
-        results are lazy plans that may be consumed after the run)."""
+        results are lazy plans that may be consumed after the run).
+        Default paths the engine made up (``session.scratch_dir``) are
+        not touched here: Spark deletes them at ``spark.stop()``."""
         while self.persisted:
             df = self.persisted.pop()
             try:

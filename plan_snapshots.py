@@ -215,21 +215,23 @@ def headline_names() -> list[str]:
     return list(bench.HEADLINE) + EXTENDED
 
 
-def generate(spark, sf_dir: str = SF_DIR, names: list[str] | None = None) -> dict[str, str]:
-    """name -> normalized formatted plan.  Constructing a catalog query
-    may run bounded setup actions (sketch-state builds, index writes) —
-    at sf0.001 that is seconds total; the snapshot itself never
-    executes the returned plan."""
+def resolve(spark, sf_dir: str = SF_DIR, names: list[str] | None = None):
+    """Yield ``(name, DataFrame)`` for each snapshot query.  Constructing
+    a catalog query may run bounded setup actions (sketch-state builds,
+    index writes) — at sf0.001 that is seconds total; the returned plan
+    itself is never executed."""
     from interlinked_spark import catalog
 
     # Cached relations from earlier work in a shared session substitute
     # InMemoryTableScan into matching subplans — snapshot the COLD plan.
     spark.catalog.clearCache()
-    out: dict[str, str] = {}
     for name in names or headline_names():
-        df = catalog.run_query(name, spark, sf_dir)
-        out[name] = normalize(formatted_plan(df))
-    return out
+        yield name, catalog.run_query(name, spark, sf_dir)
+
+
+def generate(spark, sf_dir: str = SF_DIR, names: list[str] | None = None) -> dict[str, str]:
+    """name -> normalized formatted plan."""
+    return {name: normalize(formatted_plan(df)) for name, df in resolve(spark, sf_dir, names)}
 
 
 def main() -> None:

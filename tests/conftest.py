@@ -15,6 +15,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session")
+def headline_plans(spark):
+    """The plan-snapshot pass, run once per session and shared by the
+    snapshot gate and the whole-catalog plan audit: name -> (normalized
+    formatted plan, executed-plan string) for every snapshot query."""
+    import plan_snapshots as ps
+
+    return {
+        name: (
+            ps.normalize(ps.formatted_plan(df)),
+            df._jdf.queryExecution().executedPlan().toString(),
+        )
+        for name, df in ps.resolve(spark)
+    }
+
+
 @pytest.fixture
 def no_auto_broadcast(spark):
     """Run one test with ``spark.sql.autoBroadcastJoinThreshold=-1`` —

@@ -12,7 +12,6 @@ expected first-seen-wins behavior on a corpus that is dense in cosine
 space (cf. the cos>=0.3 LSH gate)."""
 
 import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -26,17 +25,16 @@ def emb(spark):
 
 
 @pytest.fixture(scope="module")
-def built_index(spark, emb):
+def built_index(spark, emb, tmp_path_factory):
     """Index built on the base subset, held-out fifth appended against
     the frozen codebooks — the catalog resource's exact lifecycle."""
     from interlinked_spark.llm.pq_index import append_ivfpq_index, build_ivfpq_index
 
-    path = tempfile.mkdtemp(prefix="t15_ivfpq_")
+    path = str(tmp_path_factory.mktemp("t15_ivfpq_"))
     base = emb.filter(F.col("vec_id") % 5 != 0)
     build_ivfpq_index(base, path, coarse_k=8, m=8, k=16, num_files=2)
     append_ivfpq_index(emb.filter(F.col("vec_id") % 5 == 0), path, num_files=1)
-    yield path
-    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def test_append_freezes_codebooks(spark, emb, built_index):
@@ -69,36 +67,33 @@ def test_appended_codes_equal_one_shot_encode(spark, emb, built_index):
     )
 
 
-def test_index_search_matches_in_query_trilogy(spark, emb):
+def test_index_search_matches_in_query_trilogy(spark, emb, tmp_path):
     """Search through a full-corpus index == ``ivfpq_probed_top_k``
     (the in-query form) with the same fit — persistence must not move
     a single neighbor or distance."""
     from interlinked_spark.llm.embeddings import ivfpq_fit, ivfpq_probed_top_k
     from interlinked_spark.llm.pq_index import build_ivfpq_index, ivfpq_index_search
 
-    path = tempfile.mkdtemp(prefix="t15_full_")
-    try:
-        build_ivfpq_index(emb, path, coarse_k=8, m=8, k=16, num_files=2)
-        qs = emb.filter(F.col("vec_id") < 5)
-        got = {
-            (r.query_id, r.neighbor_id, r.adc)
-            for r in ivfpq_index_search(spark, path, qs, k=5, n_probe=3).collect()
-        }
-        coarse, books = ivfpq_fit(emb, coarse_k=8, m=8, k=16)
-        want = {
-            (r.query_id, r.neighbor_id, r.adc)
-            for r in ivfpq_probed_top_k(emb, qs, coarse, books, k=5, n_probe=3).collect()
-        }
-        assert got == want and len(got) == 25
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path)
+    build_ivfpq_index(emb, path, coarse_k=8, m=8, k=16, num_files=2)
+    qs = emb.filter(F.col("vec_id") < 5)
+    got = {
+        (r.query_id, r.neighbor_id, r.adc)
+        for r in ivfpq_index_search(spark, path, qs, k=5, n_probe=3).collect()
+    }
+    coarse, books = ivfpq_fit(emb, coarse_k=8, m=8, k=16)
+    want = {
+        (r.query_id, r.neighbor_id, r.adc)
+        for r in ivfpq_probed_top_k(emb, qs, coarse, books, k=5, n_probe=3).collect()
+    }
+    assert got == want and len(got) == 25
 
 
-def test_build_refuses_empty_corpus(spark, emb):
+def test_build_refuses_empty_corpus(spark, emb, tmp_path):
     from interlinked_spark.llm.pq_index import build_ivfpq_index
 
     with pytest.raises(ValueError, match="empty"):
-        build_ivfpq_index(emb.filter(F.lit(False)), tempfile.mkdtemp(prefix="t15_e_"))
+        build_ivfpq_index(emb.filter(F.lit(False)), str(tmp_path))
 
 
 def test_append_and_search_check_dim(spark, emb, built_index):
@@ -258,7 +253,7 @@ def test_filtered_search_only_allowed_neighbors(spark, emb, built_index):
     assert all(r.neighbor_id in even_ids for r in rows)
 
 
-def test_reranked_probe_all_big_c_equals_exact_topk(spark, emb):
+def test_reranked_probe_all_big_c_equals_exact_topk(spark, emb, tmp_path):
     """With probe-all and c >= corpus size the ADC stage is a complete
     candidate generator, so the exact-L2 re-rank must equal brute-force
     exact top-k — pinning that approximation lives ONLY in the
@@ -269,44 +264,41 @@ def test_reranked_probe_all_big_c_equals_exact_topk(spark, emb):
     )
     from interlinked_spark.operators.windows import top_k_per_group
 
-    path = tempfile.mkdtemp(prefix="t15_rr_")
-    try:
-        build_ivfpq_index(emb, path, coarse_k=8, m=8, k=16, num_files=1)
-        qs = emb.filter(F.col("vec_id") < 5)
-        n = emb.count()
-        got = {
-            (r.query_id, r.neighbor_id, r.l2)
-            for r in ivfpq_index_search_reranked(
-                spark, path, qs, emb, k=5, c=n, n_probe=8
-            ).collect()
-        }
-        q = qs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
-        v = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__nv"))
-        l2 = F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("__qv"),
-                    F.col("__nv"),
-                    lambda a, b: (a.cast("double") - b.cast("double"))
-                    * (a.cast("double") - b.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+    path = str(tmp_path)
+    build_ivfpq_index(emb, path, coarse_k=8, m=8, k=16, num_files=1)
+    qs = emb.filter(F.col("vec_id") < 5)
+    n = emb.count()
+    got = {
+        (r.query_id, r.neighbor_id, r.l2)
+        for r in ivfpq_index_search_reranked(
+            spark, path, qs, emb, k=5, c=n, n_probe=8
+        ).collect()
+    }
+    q = qs.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
+    v = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__nv"))
+    l2 = F.round(
+        F.aggregate(
+            F.zip_with(
+                F.col("__qv"),
+                F.col("__nv"),
+                lambda a, b: (a.cast("double") - b.cast("double"))
+                * (a.cast("double") - b.cast("double")),
             ),
-            6,
-        )
-        exact = top_k_per_group(
-            v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("l2", l2)
-            .select("query_id", "neighbor_id", "l2"),
-            ["query_id"],
-            [F.col("l2").asc(), F.col("neighbor_id").asc()],
-            5,
-        )
-        want = {(r.query_id, r.neighbor_id, r.l2) for r in exact.collect()}
-        assert got == want and len(got) == 25
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
+    exact = top_k_per_group(
+        v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("l2", l2)
+        .select("query_id", "neighbor_id", "l2"),
+        ["query_id"],
+        [F.col("l2").asc(), F.col("neighbor_id").asc()],
+        5,
+    )
+    want = {(r.query_id, r.neighbor_id, r.l2) for r in exact.collect()}
+    assert got == want and len(got) == 25
 
 
 def test_hd_rotation_is_orthogonal_and_guarded():

@@ -4,9 +4,6 @@ deletion (item 5), the append drift monitor (item 6), and the three
 ADVICE r15 library guards (prorate precondition, quantile-normalize
 NULL abstain, positional-filter x hot-gram-cap warning)."""
 
-import shutil
-import tempfile
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -26,15 +23,14 @@ def toks(spark, emb):
 
 
 @pytest.fixture(scope="module")
-def token_index(spark, toks):
+def token_index(spark, toks, tmp_path_factory):
     from interlinked_spark.llm.pq_index import build_ivfpq_token_index
 
-    path = tempfile.mkdtemp(prefix="t16_tokidx_")
+    path = str(tmp_path_factory.mktemp("t16_tokidx_"))
     build_ivfpq_token_index(
         toks, path, n_slices=4, coarse_k=8, m=2, k=16, num_files=2
     )
-    yield path
-    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 # ---------- multi-vector index + MaxSim re-rank ----------
@@ -106,7 +102,7 @@ def _maxsim_rows(spark, toks, token_index):
 # ---------- takedown deletion ----------
 
 
-def test_delete_from_index_end_to_end(spark, emb):
+def test_delete_from_index_end_to_end(spark, emb, tmp_path):
     """Deleted ids vanish from codes AND search; codebooks stay frozen;
     append still works after the delete+compact."""
     from interlinked_spark.llm.pq_index import (
@@ -117,88 +113,79 @@ def test_delete_from_index_end_to_end(spark, emb):
         load_ivfpq_index,
     )
 
-    path = tempfile.mkdtemp(prefix="t16_takedown_")
-    try:
-        base = emb.filter(F.col("vec_id") % 5 != 0)
-        build_ivfpq_index(base, path, coarse_k=8, m=8, k=16, num_files=2)
-        books_before = load_ivfpq_index(spark, path)[:2]
-        gone = emb.filter(F.col("vec_id") % 7 == 0)
-        gone_ids = {r.vec_id for r in gone.select("vec_id").collect()}
-        delete_from_ivfpq_index(spark, path, gone, compact=True, num_files=2)
-        left = {r.id for r in spark.read.parquet(f"{path}/codes").collect()}
-        assert left.isdisjoint(gone_ids)
-        assert load_ivfpq_index(spark, path)[:2] == books_before
-        # append survives the delete+compact (against frozen codebooks)
-        appended = emb.filter(
-            (F.col("vec_id") % 5 == 0) & (F.col("vec_id") % 7 != 0)
-        )
-        append_ivfpq_index(appended, path, num_files=1)
-        top = ivfpq_index_search(
-            spark, path, emb.filter(F.col("vec_id") < 5), k=5, n_probe=8
-        ).collect()
-        assert top
-        assert gone_ids.isdisjoint({r.neighbor_id for r in top})
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path)
+    base = emb.filter(F.col("vec_id") % 5 != 0)
+    build_ivfpq_index(base, path, coarse_k=8, m=8, k=16, num_files=2)
+    books_before = load_ivfpq_index(spark, path)[:2]
+    gone = emb.filter(F.col("vec_id") % 7 == 0)
+    gone_ids = {r.vec_id for r in gone.select("vec_id").collect()}
+    delete_from_ivfpq_index(spark, path, gone, compact=True, num_files=2)
+    left = {r.id for r in spark.read.parquet(f"{path}/codes").collect()}
+    assert left.isdisjoint(gone_ids)
+    assert load_ivfpq_index(spark, path)[:2] == books_before
+    # append survives the delete+compact (against frozen codebooks)
+    appended = emb.filter(
+        (F.col("vec_id") % 5 == 0) & (F.col("vec_id") % 7 != 0)
+    )
+    append_ivfpq_index(appended, path, num_files=1)
+    top = ivfpq_index_search(
+        spark, path, emb.filter(F.col("vec_id") < 5), k=5, n_probe=8
+    ).collect()
+    assert top
+    assert gone_ids.isdisjoint({r.neighbor_id for r in top})
 
 
 # ---------- append drift monitor ----------
 
 
-def test_append_stats_trend_on_drifted_batch(spark, emb):
+def test_append_stats_trend_on_drifted_batch(spark, emb, tmp_path):
     """The drift monitor's whole point: a batch the frozen codebooks
     no longer fit shows a HIGHER reconstruction error than a batch
     from the fit distribution, visible as a trend in append_stats."""
     from interlinked_spark.llm.pq_index import append_ivfpq_index, build_ivfpq_index
 
-    path = tempfile.mkdtemp(prefix="t16_drift_")
-    try:
-        build_ivfpq_index(
-            emb.filter(F.col("vec_id") % 5 != 0), path,
-            coarse_k=8, m=8, k=16, num_files=2,
-        )
-        same_dist = emb.filter(F.col("vec_id") % 5 == 0)
-        s0 = append_ivfpq_index(same_dist, path, num_files=1)
-        drifted = same_dist.select(
-            (F.col("vec_id") + 10_000).alias("vec_id"),
-            F.transform("embedding", lambda x: x * 3.0 + 2.0).alias("embedding"),
-        )
-        s1 = append_ivfpq_index(drifted, path, num_files=1)
-        assert s0["batch_seq"] == 0 and s1["batch_seq"] == 1
-        assert s1["mean_err"] > s0["mean_err"] * 2
-        assert s1["p95_err"] > s0["p95_err"]
-        stats = (
-            spark.read.parquet(f"{path}/append_stats")
-            .orderBy("batch_seq")
-            .collect()
-        )
-        assert [r.batch_seq for r in stats] == [0, 1]
-        assert stats[0].n == stats[1].n == same_dist.count()
-        assert 0.0 < stats[0].max_list_frac <= 1.0
-        assert 1 <= stats[0].n_lists_hit <= 8
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path)
+    build_ivfpq_index(
+        emb.filter(F.col("vec_id") % 5 != 0), path,
+        coarse_k=8, m=8, k=16, num_files=2,
+    )
+    same_dist = emb.filter(F.col("vec_id") % 5 == 0)
+    s0 = append_ivfpq_index(same_dist, path, num_files=1)
+    drifted = same_dist.select(
+        (F.col("vec_id") + 10_000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * 3.0 + 2.0).alias("embedding"),
+    )
+    s1 = append_ivfpq_index(drifted, path, num_files=1)
+    assert s0["batch_seq"] == 0 and s1["batch_seq"] == 1
+    assert s1["mean_err"] > s0["mean_err"] * 2
+    assert s1["p95_err"] > s0["p95_err"]
+    stats = (
+        spark.read.parquet(f"{path}/append_stats")
+        .orderBy("batch_seq")
+        .collect()
+    )
+    assert [r.batch_seq for r in stats] == [0, 1]
+    assert stats[0].n == stats[1].n == same_dist.count()
+    assert 0.0 < stats[0].max_list_frac <= 1.0
+    assert 1 <= stats[0].n_lists_hit <= 8
 
 
-def test_append_stats_opt_out_writes_nothing(spark, emb):
+def test_append_stats_opt_out_writes_nothing(spark, emb, tmp_path):
     import os
 
     from interlinked_spark.llm.pq_index import append_ivfpq_index, build_ivfpq_index
 
-    path = tempfile.mkdtemp(prefix="t16_nostats_")
-    try:
-        build_ivfpq_index(
-            emb.filter(F.col("vec_id") % 5 != 0), path,
-            coarse_k=8, m=8, k=16, num_files=2,
-        )
-        out = append_ivfpq_index(
-            emb.filter(F.col("vec_id") % 5 == 0), path,
-            num_files=1, stats=False,
-        )
-        assert out is None
-        assert not os.path.exists(f"{path}/append_stats")
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+    path = str(tmp_path)
+    build_ivfpq_index(
+        emb.filter(F.col("vec_id") % 5 != 0), path,
+        coarse_k=8, m=8, k=16, num_files=2,
+    )
+    out = append_ivfpq_index(
+        emb.filter(F.col("vec_id") % 5 == 0), path,
+        num_files=1, stats=False,
+    )
+    assert out is None
+    assert not os.path.exists(f"{path}/append_stats")
 
 
 # ---------- ADVICE r15 library guards ----------
@@ -262,10 +249,8 @@ def test_positional_filter_warns_with_hot_gram_cap(spark):
 # ---------- DDSketch relative-error quantile state ----------
 
 
-def test_ddsketch_merge_is_batching_invariant(spark):
+def test_ddsketch_merge_is_batching_invariant(spark, tmp_path):
     """Bucket-wise integer sums: build + 2 appends == one-shot, exactly."""
-    import tempfile
-
     from interlinked_spark.operators.sketches import (
         ddsketch_buckets,
         ddsketch_build,
@@ -273,7 +258,7 @@ def test_ddsketch_merge_is_batching_invariant(spark):
     )
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
-    path = tempfile.mkdtemp(prefix="t16_dd_")
+    path = str(tmp_path)
     ddsketch_build(
         o.filter(F.col("o_orderkey") % 3 == 0),
         ["o_orderpriority"], "o_totalprice", path,
@@ -299,11 +284,10 @@ def test_ddsketch_merge_is_batching_invariant(spark):
     assert merged == oneshot
 
 
-def test_ddsketch_alpha_guarantee_long_tail(spark):
+def test_ddsketch_alpha_guarantee_long_tail(spark, tmp_path):
     """The relative-error contract on a nine-decade long tail — the
     regime the fixed-grid qhist cannot cover without huge bins."""
     import math
-    import tempfile
 
     from interlinked_spark.operators.sketches import (
         ddsketch_build,
@@ -313,7 +297,7 @@ def test_ddsketch_alpha_guarantee_long_tail(spark):
     alpha = 0.02
     vals = [(0, 10 ** (i / 40.0)) for i in range(361)]  # 1 .. 1e9
     df = spark.createDataFrame(vals, "g int, v double")
-    path = tempfile.mkdtemp(prefix="t16_ddlt_")
+    path = str(tmp_path)
     ddsketch_build(df, ["g"], "v", path, alpha=alpha)
     qs = [0.01, 0.5, 0.99]
     out = {r.q: r for r in ddsketch_quantiles(spark, path, ["g"], qs).collect()}

@@ -389,12 +389,13 @@ def test_tws_stateful_counts_or_documented_gate(spark):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
 
 
-def test_whole_catalog_plan_audit(spark):
+def test_whole_catalog_plan_audit(spark, headline_plans):
     """Engine-wide plan guard over every batch catalog query: no
     accidental CartesianProduct / BroadcastNestedLoopJoin (only the
     deliberate cross-join and broadcast-theta range joins may nest
     loops) and no row-at-a-time Python (BatchEvalPython) outside the
-    labeled escape-hatch demo."""
+    labeled escape-hatch demo.  Queries the plan-snapshot pass already
+    resolved are audited from its executed plans, not built again."""
     from interlinked_spark import catalog
 
     allowed_nested_loop = {
@@ -458,8 +459,11 @@ def test_whole_catalog_plan_audit(spark):
     for name in catalog.query_names():
         if name.startswith(skip_prefixes) or name in skip:
             continue
-        df = catalog.run_query(name, spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        if name in headline_plans:
+            plan = headline_plans[name][1]
+        else:
+            df = catalog.run_query(name, spark, SF)
+            plan = df._jdf.queryExecution().executedPlan().toString()
         # A BNLJ whose broadcast side is PROVABLY one row (ungrouped
         # aggregate behind row-bounded nodes) is the engine's blessed
         # scalar-frame pattern — same proof the plan advisor uses; the

@@ -222,6 +222,23 @@ def test_stream_upsert_multi_batch_deterministic(spark, tmp_path):
     assert got == want
 
 
+def test_read_parquet_if_present(spark, tmp_path):
+    """Optional state reads: a missing path and a fresh (empty) scratch
+    directory are both absent, a written one reads back its rows."""
+    from pyspark import SparkFiles
+
+    from interlinked_spark.session import scratch_dir
+    from interlinked_spark.sources.readers import read_parquet_if_present
+
+    assert read_parquet_if_present(spark, str(tmp_path / "missing")) is None
+    fresh = scratch_dir("t3_probe_")
+    assert fresh.startswith(SparkFiles.getRootDirectory())
+    assert read_parquet_if_present(spark, fresh) is None
+    spark.range(3).write.mode("overwrite").parquet(fresh)
+    got = read_parquet_if_present(spark, fresh)
+    assert sorted(r.id for r in got.collect()) == [0, 1, 2]
+
+
 def test_forward_fill_locf(spark):
     from interlinked_spark.operators.timeseries import forward_fill
 
