@@ -20,6 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 _FORMATS = {"parquet", "csv", "json", "orc", "text"}
 
 
+# Session confs that change what parquet schema inference returns; part
+# of the schema memo's key (see read_table).
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
 def read_table(
     spark: SparkSession,
     path: str,
@@ -31,6 +39,20 @@ def read_table(
 
     ``schema`` (DDL string) skips inference — mandatory posture for csv/
     json at scale, where schema inference is a full extra pass over TBs.
+
+    Parquet read without ``schema`` infers it once per session: Spark
+    otherwise launches a schema-inference job (a footer read) on every
+    read.  The inferred ``StructType`` is kept on the SparkContext (it
+    dies with the session), keyed by the path, the reader options and
+    the session's parquet-inference confs, next to a fingerprint of the
+    path: its length, modification time and is-directory flag, plus the
+    byte, file and directory counts of a directory.  A later read whose
+    fingerprint matches passes the cached schema (no job); otherwise the
+    schema is inferred again and the entry replaced.  Only the schema is
+    reused: every read builds a fresh relation with its own file
+    listing, so a change the fingerprint misses can leave a stale
+    schema, never stale files.  csv/json/orc/text reads are not
+    memoized.
     """
     if fmt == "jdbc":
         return spark.read.format("jdbc").options(**options).load()
@@ -41,7 +63,47 @@ def read_table(
         reader = reader.schema(schema)
     if options:
         reader = reader.options(**options)
-    return getattr(reader, fmt)(path)
+    if fmt != "parquet" or schema:
+        return getattr(reader, fmt)(path)
+    fingerprint = _path_fingerprint(spark, path)
+    if fingerprint is None:  # missing path or glob: Spark reports it
+        return reader.parquet(path)
+    # Per-SparkContext, like ``session.ship_package``'s shipped flag.
+    memo = vars(spark.sparkContext).setdefault("_interlinked_parquet_schemas", {})
+    key = (
+        path,
+        tuple(sorted(options.items())),
+        tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS),
+    )
+    hit = memo.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    memo[key] = (fingerprint, df.schema)
+    return df
+
+
+def _path_fingerprint(spark: SparkSession, path: str) -> Optional[tuple]:
+    """A constant number of Hadoop ``FileSystem`` calls, whatever the
+    file count: ``getFileStatus`` (length, modification time,
+    is-directory) and, for a directory, ``getContentSummary`` (bytes,
+    files, directories).  ``None`` when the path cannot be stat-ed (a
+    missing path or a glob)."""
+    from py4j.protocol import Py4JJavaError
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(jpath)
+        if not st.isDirectory():
+            return (st.getLen(), st.getModificationTime(), False)
+        cs = fs.getContentSummary(jpath)
+    except Py4JJavaError:
+        return None
+    return (
+        st.getLen(), st.getModificationTime(), True,
+        cs.getLength(), cs.getFileCount(), cs.getDirectoryCount(),
+    )
 
 
 def scan_path(spark: SparkSession, base_dir: str, name: str, fmt: str = "parquet", **options) -> DataFrame:
@@ -111,6 +173,6 @@ def table_provider(wkf, pattern: str = "table.{name:identifier}"):
 
     @wkf.provide(pattern)
     def table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-        return normalize_nanos(spark.read.parquet(f"{base_dir}/{name}.parquet"))
+        return normalize_nanos(read_table(spark, f"{base_dir}/{name}.parquet"))
 
     return table

@@ -305,7 +305,11 @@ class Run:
 
     A value resolved twice within a run is produced once (the reference's
     evaluate-once guarantee); across runs everything recomputes.  ``None``
-    results are deliberately never cached (quirk parity).
+    results are deliberately never cached (quirk parity).  This memo is
+    per run; below it, parquet schemas inferred by
+    ``sources.read_table`` are kept per session, so a producer that
+    runs again in a later run rebuilds its DataFrame without a
+    schema-inference job.
     """
 
     def __init__(self, wkf: Workflow, **extra_kw):

@@ -239,6 +239,77 @@ def test_read_parquet_if_present(spark, tmp_path):
     assert sorted(r.id for r in got.collect()) == [0, 1, 2]
 
 
+def _table_run_jobs(spark, base_dir: str, name: str):
+    """Resolve ``table.<name>`` in a fresh catalog ``Run``; returns the
+    frame and the ids of the jobs its producer launched."""
+    from interlinked_spark import catalog
+    from interlinked_spark.workflow import Run
+
+    tracker = spark.sparkContext.statusTracker()
+    group = f"{catalog.WKF.name}:table.{name}"
+    before = set(tracker.getJobIdsForGroup(group))
+    df = Run(catalog.WKF, spark=spark, base_dir=base_dir).resolve(f"table.{name}")
+    return df, set(tracker.getJobIdsForGroup(group)) - before
+
+
+def test_parquet_schema_inferred_once_per_session(spark, tmp_path):
+    """The first ``Run`` resolving a table infers its parquet schema
+    (at most one job); a second ``Run`` in the same session reuses it
+    and launches none."""
+    spark.read.parquet(f"{SF}/lineitem.parquet").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    first, jobs = _table_run_jobs(spark, str(tmp_path), "lineitem")
+    assert len(jobs) <= 1
+    second, jobs = _table_run_jobs(spark, str(tmp_path), "lineitem")
+    assert jobs == set()
+    assert second.schema == first.schema
+    assert second.count() == first.count()
+
+
+def test_parquet_schema_memo_sees_overwrite(spark, tmp_path):
+    """Overwriting a table with an extra column and other rows changes
+    its fingerprint: the next ``Run`` infers the new schema."""
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    old, _ = _table_run_jobs(spark, str(tmp_path), "t")
+    assert old.columns == ["id"]
+    assert sorted(r.id for r in old.collect()) == [0, 1, 2]
+
+    spark.range(10, 14).withColumn("x", F.col("id") * 2).write.mode(
+        "overwrite"
+    ).parquet(path)
+    new, _ = _table_run_jobs(spark, str(tmp_path), "t")
+    assert new.columns == ["id", "x"]
+    assert sorted(map(tuple, new.collect())) == [(i, 2 * i) for i in range(10, 14)]
+
+
+def test_read_table_explicit_schema_and_text_formats_skip_memo(spark, tmp_path):
+    """An explicit ``schema=`` is used verbatim (and leaves the memo
+    alone); csv and json reads infer on every call."""
+    from interlinked_spark.sources import read_table, write_table
+
+    path = str(tmp_path / "p")
+    spark.range(3).withColumn("x", F.col("id") + 1).write.parquet(path)
+    assert read_table(spark, path, schema="id bigint").columns == ["id"]
+    assert read_table(spark, path).columns == ["id", "x"]
+
+    sc = spark.sparkContext
+    src = spark.range(3).withColumn("x", F.col("id") + 1)
+    for fmt, opts in [("csv", {"header": "true"}), ("json", {})]:
+        text_path = str(tmp_path / fmt)
+        write_table(src, text_path, fmt=fmt, **opts)
+        for attempt in range(2):
+            group = f"test:read_table_{fmt}_{attempt}"
+            sc.setJobGroup(group, "text-format schema inference")
+            try:
+                df = read_table(spark, text_path, fmt=fmt, **opts)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sorted(df.columns) == ["id", "x"], fmt
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1, fmt
+
+
 def test_forward_fill_locf(spark):
     from interlinked_spark.operators.timeseries import forward_fill
 

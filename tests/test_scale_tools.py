@@ -802,6 +802,93 @@ def test_compact_table_recovers_from_crash_residue(spark, tmp_path):
     assert rows() == 100
 
 
+def _crash_on(monkeypatch, module, name: str, hit) -> None:
+    """Patch ``module.name`` to raise on the first call ``hit(n, args)``
+    selects (``n`` counts calls from 1); other calls go through."""
+    real = getattr(module, name)
+    calls = []
+
+    def patched(*args, **kwargs):
+        calls.append(args)
+        if hit(len(calls), args):
+            raise OSError(f"simulated crash in {name}{args}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, patched)
+
+
+def _swap_residue(path: str) -> tuple[bool, bool, bool]:
+    import os
+
+    return tuple(
+        os.path.exists(p)
+        for p in (path, path + ".__compact_tmp", path + ".__compact_old")
+    )
+
+
+def test_compact_swap_killed_between_renames_restores_table(spark, tmp_path, monkeypatch):
+    """A crash on the second rename of ``_swap_in`` leaves the table only
+    as ``__compact_old`` (plus the staged copy); the next compaction
+    restores it and keeps every row."""
+    import os
+
+    from interlinked_spark.sources.writers import compact_table
+
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(6).write.parquet(path)
+    with monkeypatch.context() as m:
+        _crash_on(m, os, "rename", lambda n, args: n == 2)
+        with pytest.raises(OSError, match="simulated crash"):
+            compact_table(spark, path, num_files=2)
+    assert _swap_residue(path) == (False, True, True)
+
+    compact_table(spark, path, num_files=2)
+    assert _swap_residue(path) == (True, False, False)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+
+
+def test_compact_swap_leftover_backup_is_removed(spark, tmp_path, monkeypatch):
+    """A swap that completed both renames but died before deleting its
+    backup leaves ``__compact_old`` next to the new table; the next
+    compaction removes it."""
+    import shutil
+
+    from interlinked_spark.sources.writers import compact_table
+
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(6).write.parquet(path)
+    with monkeypatch.context() as m:
+        _crash_on(m, shutil, "rmtree", lambda n, args: args[0].endswith(".__compact_old"))
+        with pytest.raises(OSError, match="simulated crash"):
+            compact_table(spark, path, num_files=2)
+    assert _swap_residue(path) == (True, False, True)
+
+    compact_table(spark, path, num_files=2)
+    assert _swap_residue(path) == (True, False, False)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+
+
+def test_compact_swap_stale_staging_dir_is_removed(spark, tmp_path, monkeypatch):
+    """A crash after the staged write but before the first rename leaves
+    a stale ``__compact_tmp``; recovery deletes it and leaves the table
+    as it was."""
+    import os
+
+    from interlinked_spark.sources.writers import _recover_swap_residue, compact_table
+
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(6).write.parquet(path)
+    with monkeypatch.context() as m:
+        _crash_on(m, os, "rename", lambda n, args: n == 1)
+        with pytest.raises(OSError, match="simulated crash"):
+            compact_table(spark, path, num_files=2)
+    assert _swap_residue(path) == (True, True, False)
+
+    _recover_swap_residue(path)
+    assert _swap_residue(path) == (True, False, False)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+
+
 def test_vector_index_rejects_dim_mismatch(spark, tmp_path):
     """A batch whose vectors have a different dim than the stored index
     must fail loudly (a mismatched batch bands with different
