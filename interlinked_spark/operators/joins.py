@@ -201,188 +201,40 @@ def qgram_array_sql(expr: str, q: int = 3) -> str:
     )
 
 
-def _fuzzy_frames(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    left_id: str,
-    right_id: str,
-    threshold: float,
-    q: int,
-    extra: list,
-    dedupe_self: bool,
-    max_qgram_df: Optional[int],
-    prefix_filter: bool,
-    same_side: bool = False,
-    positional_filter: bool = False,
-):
-    """Shared candidate-generation pipeline for :func:`fuzzy_string_join`
-    and :func:`fuzzy_candidate_stats` — returns ``(lg, rg, lpost, rpost,
-    cand)`` where ``cand`` is the RAW posting-join output (pre-distinct,
-    post ``dedupe_self``): its row count is the candidate MASS the
-    prefix filter exists to cut.
-
-    ``positional_filter`` (PPJoin, Xiao et al. 2008; requires
-    ``prefix_filter``): postings additionally carry the gram's 1-based
-    rank in the canonical order plus the gram-set size, and a candidate
-    occurrence survives only if the overlap still REACHABLE from that
-    rank — ``min(|gl| - pl, |gr| - pr) + 1`` grams including the shared
-    one — meets the Jaccard-equivalent requirement
-    ``ceil(t / (1 + t) * (|gl| + |gr|))``.  EXACT: the pair's first
-    common gram in canonical order always passes the bound when
-    J >= t, so at least one occurrence survives for every true pair
-    (only redundant occurrences and hopeless pairs are cut — measured
-    in SCALING.json ``fuzzy_positional_ab``).
-
-    Exactness caveat (ADVICE r15): the first-common-gram argument
-    assumes no posting is dropped, so it holds WITHOUT
-    ``max_qgram_df``.  Combining both is lossier than either alone:
-    when the hot-gram cap removes a pair's first common prefix gram,
-    the remaining occurrences carry ranks past it (reachable <= O-1),
-    which can fall below alpha for pairs whose overlap is exactly at
-    the bound — pairs the plain prefix path under the same cap still
-    kept.  Both remain APPROXIMATE under a df cap either way; the
-    combination is allowed (it is the standard recall-for-cost trade)
-    but warns, so the loss is a decision, not a surprise."""
-    if positional_filter and not prefix_filter:
-        raise ValueError(
-            "positional_filter requires prefix_filter: positions are "
-            "ranks in the canonical prefix order."
-        )
-    if positional_filter and max_qgram_df is not None:
-        import warnings
-
-        warnings.warn(
-            "positional_filter + max_qgram_df: dropping hot grams can "
-            "push a boundary pair's surviving occurrences past the "
-            "positional bound — recall can dip below the plain "
-            "prefix-filter path under the same cap (see docstring). "
-            "Exactness holds only without max_qgram_df.",
-            stacklevel=3,
-        )
-
-    def gram_frame(side: DataFrame, col: str, id_col: str) -> DataFrame:
-        # Normalize staged + spread BEFORE shingling: the q-gram build
-        # is the compute-heavy narrow stage, and a single-file scan
-        # would run it all on one task (operators/partitioning.spread).
-        staged = spread(
-            side.select(F.col(id_col), *extra, norm_string(col).alias("__qs"))
-        )
-        return staged.select(
-            F.col(id_col), *extra, _qgrams_of_norm("__qs", q).alias("__gr")
-        ).withColumn("__n", F.size("__gr"))
-
-    def postings(gf: DataFrame, id_col: str, tag: str) -> DataFrame:
-        if prefix_filter:
-            # Global canonical gram order = md5(gram): deterministic,
-            # data-independent (df-ascending would be optimal but costs
-            # a frequency pass; md5 decorrelates from the text either
-            # way).  Prefix length |g| - ceil(t|g|) + 1.
-            plen = (
-                F.col("__n")
-                - F.ceil(F.lit(float(threshold)) * F.col("__n")).cast("int")
-                + F.lit(1)
-            )
-            ordered = F.transform(
-                F.array_sort(
-                    F.transform(
-                        "__gr", lambda g: F.struct(F.md5(g).alias("h"), g.alias("g"))
-                    )
-                ),
-                lambda s: s["g"],
-            )
-            grams = F.slice(ordered, F.lit(1), plen)
-        else:
-            grams = F.col("__gr")
-        if positional_filter:
-            return gf.select(
-                id_col, *extra, F.col("__n").alias(f"__n{tag}"),
-                F.posexplode(grams).alias(f"__p{tag}", "__g"),
-            )
-        return gf.select(id_col, *extra, F.explode(grams).alias("__g"))
-
-    # Each gram frame feeds BOTH the posting explode and the exact-
-    # Jaccard verify join; without truncation the base scan + normalize
-    # + shingle lineage re-runs for each consumer (twice per side — at
-    # 100 TB the scan IS the cost).  Same executor-local checkpoint as
-    # the dedup family (llm/dedup.py).
-    lg = gram_frame(left, left_col, left_id).localCheckpoint(eager=False)
-    # same_side: right is the SAME relation as left (self-join) — its
-    # gram frame is a rename of the materialized left one, so the
-    # corpus is scanned + shingled + checkpointed ONCE, not twice.
-    rg = (
-        lg.withColumnRenamed(left_id, right_id)
-        if same_side
-        else gram_frame(right, right_col, right_id).localCheckpoint(eager=False)
-    )
-    lpost, rpost = postings(lg, left_id, "l"), postings(rg, right_id, "r")
-    if max_qgram_df is not None:
-        hot = (
-            lpost.select("__g")
-            .unionByName(rpost.select("__g"))
-            .groupBy("__g")
-            .count()
-            .filter(F.col("count") > max_qgram_df)
-            .select("__g")
-        )
-        lpost = lpost.join(F.broadcast(hot), "__g", "left_anti")
-        rpost = rpost.join(F.broadcast(hot), "__g", "left_anti")
-    cand = lpost.join(rpost, ["__g", *extra])
-    if positional_filter:
-        # remaining-overlap bound, counting the shared gram: posexplode
-        # positions are 0-based, so rank i+1 leaves |g| - i grams.
-        reachable = F.least(
-            F.col("__nl") - F.col("__pl"), F.col("__nr") - F.col("__pr")
-        )
-        alpha = F.ceil(
-            F.lit(float(threshold) / (1.0 + float(threshold)))
-            * (F.col("__nl") + F.col("__nr"))
-        )
-        cand = cand.filter(reachable >= alpha)
-    if dedupe_self:
-        cand = cand.filter(F.col(left_id) < F.col(right_id))
-    return lg, rg, lpost, rpost, cand
-
-
-def fuzzy_candidate_stats(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    left_id: str,
-    right_id: str,
-    threshold: float = 0.5,
-    q: int = 3,
-    extra_on: Optional[Sequence[str]] = None,
-    dedupe_self: bool = False,
-    max_qgram_df: Optional[int] = None,
-    prefix_filter: bool = True,
-    same_side: bool = False,
-    positional_filter: bool = False,
-) -> dict:
-    """Diagnostic twin of :func:`fuzzy_string_join`: instead of the
-    verified pairs, return the pipeline's volume counters as driver
-    scalars — posting rows per side, raw candidate mass (posting-join
-    output, pre-distinct), and distinct candidate pairs (= exact-Jaccard
-    verifications that would run).  This is the A/B instrument for the
-    prefix filter's claimed cut (``prefix_filter`` on vs off); the
-    counts are what an operator would watch before unleashing the join
-    on a 100-TB corpus."""
-    extra = list(extra_on or [])
-    _lg, _rg, lpost, rpost, cand = _fuzzy_frames(
-        left, right, left_col, right_col, left_id, right_id,
-        threshold, q, extra, dedupe_self, max_qgram_df, prefix_filter,
-        same_side, positional_filter,
-    )
-    return {
-        "postings_left": lpost.count(),
-        "postings_right": rpost.count(),
-        "candidate_mass": cand.count(),
-        "candidate_pairs": (
-            cand.select(left_id, right_id, *extra).distinct().count()
+def _md5_gram_order() -> Column:
+    """The ``__gr`` gram array in the global canonical order both prefix
+    filters slice from: md5(gram) — deterministic, data-independent
+    (df-ascending would be optimal but costs a frequency pass; md5
+    decorrelates from the text either way)."""
+    return F.transform(
+        F.array_sort(
+            F.transform("__gr", lambda g: F.struct(F.md5(g).alias("h"), g.alias("g")))
         ),
-    }
+        lambda s: s["g"],
+    )
+
+
+def _drop_hot_grams(
+    lpost: DataFrame, rpost: DataFrame, max_qgram_df: Optional[int]
+) -> tuple[DataFrame, DataFrame]:
+    """The ``max_qgram_df`` hot-gram cap shared by both q-gram joins:
+    one gram-level aggregate over BOTH sides' postings, then broadcast
+    anti-joins drop every posting whose gram's combined document
+    frequency exceeds the cap.  ``None`` keeps every posting."""
+    if max_qgram_df is None:
+        return lpost, rpost
+    hot = (
+        lpost.select("__g")
+        .unionByName(rpost.select("__g"))
+        .groupBy("__g")
+        .count()
+        .filter(F.col("count") > max_qgram_df)
+        .select("__g")
+    )
+    return (
+        lpost.join(F.broadcast(hot), "__g", "left_anti"),
+        rpost.join(F.broadcast(hot), "__g", "left_anti"),
+    )
 
 
 def fuzzy_string_join(
@@ -397,9 +249,7 @@ def fuzzy_string_join(
     extra_on: Optional[Sequence[str]] = None,
     dedupe_self: bool = False,
     max_qgram_df: Optional[int] = None,
-    prefix_filter: bool = True,
     same_side: bool = False,
-    positional_filter: bool = False,
 ) -> DataFrame:
     """Entity-resolution fuzzy join: pairs of rows whose strings match
     at q-gram Jaccard >= ``threshold`` — duplicate product listings,
@@ -407,26 +257,21 @@ def fuzzy_string_join(
 
     Scale posture — never the cartesian, and not even the full posting
     join: candidates come from PREFIX-FILTERED (id, gram) postings
-    (SSJoin/PPJoin): grams sort in a global md5 order and each row
-    indexes only its first ``|g| - ceil(t*|g|) + 1`` grams — EXACT,
-    because a pair with J >= t shares >= ceil(t*|x|) grams per side,
-    so its globally-smallest shared gram must sit inside BOTH
-    prefixes.  Measured at t=0.5 on the part corpus (SCALING.json
-    ``fuzzy_prefix_filter_ab``): 0.60x posting volume, 0.54x raw
-    candidate mass vs indexing every gram — it halves both (the
-    earlier "quarters candidate mass" estimate overshot; blocking
-    keys already absorb part of the cut).  The posting equi-join (on
-    the gram + ``extra_on``
-    exact blocking keys — the standard ER practice: block on
-    brand/zip/etc.) yields DISTINCT candidate pairs; verification then
-    computes exact Jaccard from the two full gram ARRAYS
-    (``array_intersect`` on ~tens of elements per pair, JVM-side).
-    ``max_qgram_df`` additionally drops prefix grams whose combined
-    document frequency exceeds the cap (one gram-level aggregate +
-    broadcast anti-joins), trading recall ONLY for pairs whose every
-    shared prefix gram is ultra-common (documented, like the MinHash
-    hot-bucket cap).  ``prefix_filter=False`` indexes every gram (the
-    naive posture; kept for A/B).  At 100 TB the posting join shuffles
+    (SSJoin): grams sort in a global md5 order and each row indexes
+    only its first ``|g| - ceil(t*|g|) + 1`` grams — EXACT, because a
+    pair with J >= t shares >= ceil(t*|x|) grams per side, so its
+    globally-smallest shared gram must sit inside BOTH prefixes.
+    Measured at t=0.5 on the part corpus (SCALING.md): 0.60x posting
+    volume, 0.54x raw candidate mass vs indexing every gram.  The
+    posting equi-join (on the gram + ``extra_on`` exact blocking keys —
+    the standard ER practice: block on brand/zip/etc.) yields DISTINCT
+    candidate pairs; verification then computes exact Jaccard from the
+    two full gram ARRAYS (``array_intersect`` on ~tens of elements per
+    pair, JVM-side).  ``max_qgram_df`` additionally drops prefix grams
+    whose combined document frequency exceeds the cap (one gram-level
+    aggregate + broadcast anti-joins), trading recall ONLY for pairs
+    whose every shared prefix gram is ultra-common (documented, like
+    the MinHash hot-bucket cap).  At 100 TB the posting join shuffles
     O(rows x prefix), not O(rows^2).
 
     ``left``/``right`` must carry unique ``left_id``/``right_id``
@@ -446,12 +291,46 @@ def fuzzy_string_join(
     SAME relation as ``left`` (the self-join/dedupe shape): one gram
     frame is built and checkpointed, the other is a column rename of it
     — one corpus scan + shingle pass TOTAL instead of two."""
-    lg, rg, _lpost, _rpost, cand = _fuzzy_frames(
-        left, right, left_col, right_col, left_id, right_id,
-        threshold, q, list(extra_on or []), dedupe_self,
-        max_qgram_df, prefix_filter, same_side, positional_filter,
-    )
     extra = list(extra_on or [])
+
+    def gram_frame(side: DataFrame, col: str, id_col: str) -> DataFrame:
+        # Normalize staged + spread BEFORE shingling: the q-gram build
+        # is the compute-heavy narrow stage, and a single-file scan
+        # would run it all on one task (operators/partitioning.spread).
+        # The frame feeds BOTH the posting explode and the verify join;
+        # the checkpoint keeps the scan + normalize + shingle lineage
+        # from re-running per consumer (at 100 TB the scan IS the cost).
+        staged = spread(
+            side.select(F.col(id_col), *extra, norm_string(col).alias("__qs"))
+        )
+        return (
+            staged.select(
+                F.col(id_col), *extra, _qgrams_of_norm("__qs", q).alias("__gr")
+            ).withColumn("__n", F.size("__gr"))
+            .localCheckpoint(eager=False)
+        )
+
+    def postings(gf: DataFrame, id_col: str) -> DataFrame:
+        plen = (
+            F.col("__n")
+            - F.ceil(F.lit(float(threshold)) * F.col("__n")).cast("int")
+            + F.lit(1)
+        )
+        grams = F.slice(_md5_gram_order(), F.lit(1), plen)
+        return gf.select(id_col, *extra, F.explode(grams).alias("__g"))
+
+    lg = gram_frame(left, left_col, left_id)
+    rg = (
+        lg.withColumnRenamed(left_id, right_id)
+        if same_side
+        else gram_frame(right, right_col, right_id)
+    )
+    lpost, rpost = _drop_hot_grams(
+        postings(lg, left_id), postings(rg, right_id), max_qgram_df
+    )
+    cand = lpost.join(rpost, ["__g", *extra])
+    if dedupe_self:
+        cand = cand.filter(F.col(left_id) < F.col(right_id))
     cand = cand.select(left_id, right_id, *extra).distinct()
     verified = cand.join(
         lg.select(left_id, F.col("__gr").alias("__lgr"), F.col("__n").alias("__ln")),
@@ -468,33 +347,81 @@ def fuzzy_string_join(
     )
 
 
-def _edit_frames(
+def edit_distance_join(
     left: DataFrame,
     right: DataFrame,
     left_col: str,
     right_col: str,
     left_id: str,
     right_id: str,
-    d: int,
-    q: int,
-    extra: list,
-    max_qgram_df: Optional[int],
-    prefix_filter: bool,
-    prefix_count: int,
-    dedupe_self: bool,
-    same_side: bool,
-):
-    """Shared candidate-generation pipeline for :func:`edit_distance_join`
-    and :func:`edit_candidate_stats` — returns ``(lg, rg, lpost, rpost,
-    raw, cand, short)`` where ``raw`` is the posting-join output after
-    the length filter (pre-aggregate: its row count is the candidate
-    MASS the prefix filter exists to cut), ``cand`` the distinct id
-    pairs surviving the shared-prefix-count aggregate, and ``short`` the
-    short-string band's id pairs."""
+    max_distance: int = 2,
+    q: int = 2,
+    extra_on: Optional[Sequence[str]] = None,
+    dedupe_self: bool = False,
+    max_qgram_df: Optional[int] = None,
+    same_side: bool = False,
+) -> DataFrame:
+    """Edit-distance (Levenshtein) similarity join: pairs of rows whose
+    NORMALIZED strings (:func:`norm_string`) are within ``max_distance``
+    edits — typo-tolerant record linkage, the complement of
+    :func:`fuzzy_string_join`'s token-overlap notion (Jaccard tolerates
+    word reordering, edit distance tolerates character noise).
+
+    Scale posture — never the cartesian, and not even the full posting
+    join: candidates come from PREFIX-FILTERED (id, gram) postings in
+    the global md5 gram order.  The Ed-Join/qgram-join count bound says
+    a pair within ``d`` edits shares at least ``c = max(|Gx|,|Gy|) -
+    q*d`` distinct grams (one edit destroys at most ``q`` of them); the
+    prefix-filter lemma (sets sharing >= c elements have their length
+    ``|G| - c + 1`` prefixes, in any GLOBAL total order, sharing one)
+    then says the length ``min(|G|, q*d + 1)`` prefixes of both sides
+    share a gram — so each row indexes only ``min(|G|, q*d + 1)``
+    grams, EXACT, and posting volume per row is O(q*d), not O(|G|): at
+    q=2, d=2 that is 5 postings per row regardless of string length,
+    which removes the ultra-common-2-gram ("er", "a ") blowup of the
+    full-posting variant (A/B at sf0.1: postings 163k -> 100k, raw
+    candidate mass 22.1M -> 6.3M after the in-join self-dedupe,
+    SCALING.md).  The posting equi-join (gram + ``extra_on`` blocking
+    keys) carries a normalized-length filter (``| |x|-|y| | <= d`` —
+    each edit changes length by at most 1), and a ``distinct`` yields
+    candidate pairs (any prefix collision is the necessary condition).
+    ``max_qgram_df`` additionally drops prefix grams whose combined
+    document frequency exceeds the cap (one gram-level aggregate +
+    broadcast anti-joins), trading recall ONLY for pairs whose every
+    shared prefix gram is ultra-common — documented, like the fuzzy
+    join's lever.
+
+    Verification joins candidate ids back to the normalized STRINGS
+    only (no gram arrays cross the shuffle) and runs
+    ``levenshtein(x, y, threshold=d)`` — the early-exit O(d*len) form.
+    A full-count ``array_intersect`` re-check was measured slower than
+    threshold-levenshtein itself on surviving candidates and is gone —
+    the count bound already did its work selecting the prefix.
+
+    Strings too short for the bound to bite (``|G| <= q*d``) can share
+    ZERO grams with a valid partner, so they go through a separate
+    short-string band: length-BUCKETED pairs (width ``d+1`` equi-join,
+    never a cross join) within the blocking keys, unioned in before
+    verification.  Residual contract: a corpus with a huge population
+    of same-length-band gram-poor strings (e.g. millions of
+    ``"aaaa..."`` of equal length) in ONE block concentrates that
+    band's pairing; block finer or pre-dedupe such strings.
+
+    Exact (100% recall) by construction: prefix and length filters are
+    both necessary conditions for ``ed <= d``.  Returns
+    ``extra_on + (left_id, right_id, distance)``.  ``dedupe_self=True``
+    keeps ``left_id < right_id`` (self-join case).  Gram frames are
+    checkpointed (``localCheckpoint``) — they feed postings, the short
+    band, and verification; ``same_side=True`` declares that ``right``
+    is the SAME relation as ``left`` (self-join), so one gram frame is
+    built and checkpointed and the other is a column rename of it —
+    one corpus scan + shingle pass instead of two."""
+    extra = list(extra_on or [])
+    d = int(max_distance)
 
     def gram_frame(side: DataFrame, col: str, id_col: str) -> DataFrame:
         # Staged normalize + spread before the q-gram build (see
-        # _fuzzy_frames.gram_frame).
+        # fuzzy_string_join's gram_frame).
         staged = spread(
             side.select(F.col(id_col), *extra, norm_string(col).alias("__s"))
         )
@@ -508,101 +435,32 @@ def _edit_frames(
             .localCheckpoint(eager=False)
         )
 
+    def postings(gf: DataFrame, id_col: str, tag: str) -> DataFrame:
+        grams = F.slice(
+            _md5_gram_order(), F.lit(1), F.least(F.col("__n"), F.lit(q * d + 1))
+        )
+        return gf.select(
+            id_col, *extra, F.col("__len").alias(f"__{tag}len"),
+            F.explode(grams).alias("__g"),
+        )
+
     lg = gram_frame(left, left_col, left_id)
-    # same_side: the self-join declaration — right is the SAME relation
-    # as left (modulo id column name), so the right gram frame is a
-    # rename of the already-materialized left one: one scan + normalize
-    # + shingle + checkpoint instead of two.
     rg = (
         lg.withColumnRenamed(left_id, right_id)
         if same_side
         else gram_frame(right, right_col, right_id)
     )
-
-    t = max(int(prefix_count), 1)
-
-    def postings(gf: DataFrame, id_col: str) -> DataFrame:
-        if prefix_filter:
-            # Ed-Join count-filter prefix, generalized to the t-prefix
-            # scheme: a pair within d edits shares c = max(|Gx|,|Gy|) -
-            # q*d distinct grams, and the standard prefix-filter lemma
-            # says sets sharing >= c elements have their length
-            # (|G| - c + k) prefixes (in any GLOBAL total order — md5
-            # here) sharing >= k elements, for every k <= c.  With
-            # k = min(c, t) and c >= |G_side| - q*d, prefix length
-            # min(|G|, q*d + t) per side guarantees >= min(c, t) shared
-            # PREFIX grams for every valid pair — exact, and posting
-            # volume per row is O(q*d + t), not O(|G|).
-            ordered = F.transform(
-                F.array_sort(
-                    F.transform(
-                        "__gr", lambda g: F.struct(F.md5(g).alias("h"), g.alias("g"))
-                    )
-                ),
-                lambda s: s["g"],
-            )
-            grams = F.slice(
-                ordered, F.lit(1), F.least(F.col("__n"), F.lit(q * d + t))
-            )
-        else:
-            grams = F.col("__gr")
-        return gf.select(
-            id_col, *extra, F.col("__len"), F.col("__n"),
-            F.explode(grams).alias("__g"),
-        )
-
-    lpost = (
-        postings(lg, left_id)
-        .withColumnRenamed("__len", "__llen")
-        .withColumnRenamed("__n", "__ln")
+    lpost, rpost = _drop_hot_grams(
+        postings(lg, left_id, "l"), postings(rg, right_id, "r"), max_qgram_df
     )
-    rpost = (
-        postings(rg, right_id)
-        .withColumnRenamed("__len", "__rlen")
-        .withColumnRenamed("__n", "__rn")
-    )
-    if max_qgram_df is not None:
-        hot = (
-            lpost.select("__g")
-            .unionByName(rpost.select("__g"))
-            .groupBy("__g")
-            .count()
-            .filter(F.col("count") > max_qgram_df)
-            .select("__g")
-        )
-        lpost = lpost.join(F.broadcast(hot), "__g", "left_anti")
-        rpost = rpost.join(F.broadcast(hot), "__g", "left_anti")
     raw = lpost.join(rpost, ["__g", *extra]).filter(
         F.abs(F.col("__llen") - F.col("__rlen")) <= d
     )
     if dedupe_self:
-        # halve the aggregate input for the self-join case BEFORE the
-        # shuffle, not after the distinct (same policy as _fuzzy_frames)
+        # halve the distinct's input for the self-join case BEFORE the
+        # shuffle, not after it (same policy as fuzzy_string_join)
         raw = raw.filter(F.col(left_id) < F.col(right_id))
-    if prefix_filter and t > 1:
-        # Shared-prefix-count aggregate: a valid pair shares >=
-        # min(c, t) prefix grams (lemma above), and c = max(|Gx|,|Gy|)
-        # - q*d is computable per pair from the carried sizes — the
-        # count filter prunes candidates BEFORE the verify join fetches
-        # any string.  least(c, t) >= 1 for every pair outside the
-        # short band (max > q*d there).  The sizes ride as GROUP KEYS
-        # (functionally dependent on the ids — no first() aggregates).
-        cand = (
-            raw.groupBy(left_id, right_id, *extra, "__ln", "__rn")
-            .agg(F.count("*").alias("__shared_pref"))
-            .filter(
-                F.col("__shared_pref")
-                >= F.least(
-                    F.greatest(F.col("__ln"), F.col("__rn")) - F.lit(q * d),
-                    F.lit(t),
-                )
-            )
-            .select(left_id, right_id, *extra)
-        )
-    else:
-        # t == 1: count >= 1 is implied by the join itself — distinct
-        # replaces the counting aggregate (same shuffle, no counters).
-        cand = raw.select(left_id, right_id, *extra).distinct()
+    cand = raw.select(left_id, right_id, *extra).distinct()
     # Short-string band: |G| <= q*d strings can evade the posting join
     # entirely (a valid pair may share zero grams).  Any partner must
     # ALSO be short — c >= 1 whenever EITHER side has |G| > q*d, and the
@@ -614,9 +472,7 @@ def _edit_frames(
     # once), so even a corpus heavy in short or gram-poor repetitive
     # strings ("aaaa...", |G|=1 at any length) never cross-joins: the
     # hazard population is same-bucket SAME-LENGTH-BAND rows within a
-    # block.  A corpus with millions of equal-length gram-poor strings
-    # in one block still floods this band — that residual contract is
-    # documented on edit_distance_join.
+    # block (the residual contract in the docstring).
     ls = lg.filter(F.col("__n") <= q * d).select(
         left_id, *extra, F.col("__len").alias("__llen")
     )
@@ -635,132 +491,6 @@ def _edit_frames(
     )
     if dedupe_self:
         short = short.filter(F.col(left_id) < F.col(right_id))
-    return lg, rg, lpost, rpost, raw, cand, short
-
-
-def edit_candidate_stats(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    left_id: str,
-    right_id: str,
-    max_distance: int = 2,
-    q: int = 2,
-    extra_on: Optional[Sequence[str]] = None,
-    dedupe_self: bool = False,
-    max_qgram_df: Optional[int] = None,
-    prefix_filter: bool = True,
-    prefix_count: int = 1,
-    same_side: bool = False,
-) -> dict:
-    """Diagnostic twin of :func:`edit_distance_join` (the
-    :func:`fuzzy_candidate_stats` analog, r12 verdict item 2): posting
-    rows per side, raw candidate mass (posting-join output after the
-    length filter, pre-aggregate), short-band pairs, and distinct
-    candidate pairs (= exact ``levenshtein`` verifications that would
-    run).  The A/B instrument for the Ed-Join prefix filter's cut."""
-    extra = list(extra_on or [])
-    _lg, _rg, lpost, rpost, raw, cand, short = _edit_frames(
-        left, right, left_col, right_col, left_id, right_id,
-        int(max_distance), q, extra, max_qgram_df, prefix_filter,
-        int(prefix_count), dedupe_self, same_side,
-    )
-    return {
-        "postings_left": lpost.count(),
-        "postings_right": rpost.count(),
-        "candidate_mass": raw.count(),
-        "short_band_pairs": short.count(),
-        "candidate_pairs": cand.unionByName(short).distinct().count(),
-    }
-
-
-def edit_distance_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    left_id: str,
-    right_id: str,
-    max_distance: int = 2,
-    q: int = 2,
-    extra_on: Optional[Sequence[str]] = None,
-    dedupe_self: bool = False,
-    max_qgram_df: Optional[int] = None,
-    prefix_filter: bool = True,
-    prefix_count: int = 1,
-    same_side: bool = False,
-) -> DataFrame:
-    """Edit-distance (Levenshtein) similarity join: pairs of rows whose
-    NORMALIZED strings (:func:`norm_string`) are within ``max_distance``
-    edits — typo-tolerant record linkage, the complement of
-    :func:`fuzzy_string_join`'s token-overlap notion (Jaccard tolerates
-    word reordering, edit distance tolerates character noise).
-
-    Scale posture — never the cartesian, and (r13) not even the full
-    posting join: candidates come from PREFIX-FILTERED (id, gram)
-    postings in the global md5 gram order.  The Ed-Join/qgram-join
-    count bound says a pair within ``d`` edits shares at least
-    ``c = max(|Gx|,|Gy|) - q*d`` distinct grams (one edit destroys at
-    most ``q`` of them); the prefix-filter lemma then says the length
-    ``min(|G|, q*d + t)`` prefixes of both sides (``t`` =
-    ``prefix_count``) share at least ``min(c, t)`` grams — so each row
-    indexes only ``min(|G|, q*d + t)`` grams, EXACT, and posting volume
-    per row is O(q*d + t), not O(|G|): at q=2, d=2 that is 5-6 postings
-    per row regardless of string length, which removes the
-    ultra-common-2-gram ("er", "a ") blowup the r12 full-posting
-    variant had (A/B at sf0.1: postings 163k -> 100k, raw candidate
-    mass 22.1M -> 6.3M after the in-join self-dedupe, SCALING.md r13).
-    The posting equi-join (gram + ``extra_on`` blocking keys) carries a
-    normalized-length filter (``| |x|-|y| | <= d`` — each edit changes
-    length by at most 1).  At t=1 a ``distinct`` yields candidate
-    pairs (any prefix collision is the necessary condition); at t>=2
-    ONE counting aggregate keeps only pairs sharing ``>= min(c, t)``
-    prefix grams (``c`` recomputed per pair from carried gram-set
-    sizes) — measured at sf0.1, t=2 trims verify pairs 1.44x (3.09M ->
-    2.15M) but the extra posting volume and counters cost more than
-    the threshold-levenshtein verify saves, so t=1 is the default and
-    t is a knob for corpora with expensive verification (long strings).
-    ``max_qgram_df`` additionally drops prefix grams whose combined
-    document frequency exceeds the cap (one gram-level aggregate +
-    broadcast anti-joins), trading recall ONLY for pairs whose every
-    shared prefix gram is ultra-common — documented, like the fuzzy
-    join's lever; ``prefix_filter=False`` restores the index-every-gram
-    posture for A/B (:func:`edit_candidate_stats`).
-
-    Verification joins candidate ids back to the normalized STRINGS
-    only (no gram arrays cross the shuffle) and runs
-    ``levenshtein(x, y, threshold=d)`` — the early-exit O(d*len) form.
-    The r12 full-count ``array_intersect`` re-check was measured
-    slower than threshold-levenshtein itself on surviving candidates
-    and is gone — the count bound already did its work selecting the
-    prefix.
-
-    Strings too short for the bound to bite (``|G| <= q*d``) can share
-    ZERO grams with a valid partner, so they go through a separate
-    short-string band: length-BUCKETED pairs (width ``d+1`` equi-join,
-    never a cross join) within the blocking keys, unioned in before
-    verification.  Residual contract: a corpus with a huge population
-    of same-length-band gram-poor strings (e.g. millions of
-    ``"aaaa..."`` of equal length) in ONE block concentrates that
-    band's pairing; block finer or pre-dedupe such strings.
-
-    Exact (100% recall) by construction: prefix, length and count
-    filters are all necessary conditions for ``ed <= d``.  Returns
-    ``extra_on + (left_id, right_id, distance)``.  ``dedupe_self=True``
-    keeps ``left_id < right_id`` (self-join case).  Gram frames are
-    checkpointed (``localCheckpoint``) — they feed postings, the short
-    band, and verification; ``same_side=True`` declares that ``right``
-    is the SAME relation as ``left`` (self-join), so one gram frame is
-    built and checkpointed and the other is a column rename of it —
-    one corpus scan + shingle pass instead of two."""
-    extra = list(extra_on or [])
-    d = int(max_distance)
-    lg, rg, _lpost, _rpost, _raw, cand, short = _edit_frames(
-        left, right, left_col, right_col, left_id, right_id,
-        d, q, extra, max_qgram_df, prefix_filter, int(prefix_count),
-        dedupe_self, same_side,
-    )
     cand = cand.unionByName(short).distinct()
     verified = cand.join(
         lg.select(left_id, F.col("__s").alias("__lstr")), left_id

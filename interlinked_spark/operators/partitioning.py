@@ -21,7 +21,7 @@ split 32 ways pays 32 task launches + 32 Arrow batch setups for
 sub-millisecond slices of work — measured at sf0.1, several UDF fan-out
 queries ran FASTER on local[8] than local[32] purely from this
 overhead.  The width is capped at ``ceil(estimated_bytes /
-SPREAD_BYTES_PER_TASK)`` using Catalyst's optimized-plan size estimate
+64 KiB)`` using Catalyst's optimized-plan size estimate
 (driver-side, no job): tiny frames get a handful of tasks, anything
 beyond ~2 MB saturates the session's parallelism, and at fact scale the
 estimate is huge so the cap never binds — the floor is a lower bound on
@@ -30,7 +30,6 @@ per-task work, not a local core-count constant.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -41,10 +40,8 @@ __all__ = ["spread"]
 # parquet text expands 3-5x in memory and the downstream kernels
 # (shingling, md5, inverse-CDF sampling) multiply work further, so 64 KB
 # of input is tens of milliseconds of compute — enough to amortize the
-# ~10 ms task launch.  Env-tunable for clusters with different
-# scheduling costs; the default is a work-per-task bound, not a core
-# count.
-_BYTES_PER_TASK = int(os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", 1 << 16))
+# ~10 ms task launch.  A work-per-task bound, not a core count.
+_BYTES_PER_TASK = 1 << 16
 
 # Catalyst returns Long.MaxValue-ish estimates when it cannot size a
 # plan; treat anything absurd as "unknown" and keep full parallelism.
@@ -63,29 +60,17 @@ def _estimated_bytes(df: DataFrame) -> Optional[int]:
     return est
 
 
-def spread(
-    df: DataFrame,
-    min_parts: Optional[int] = None,
-    bytes_per_task: Optional[int] = None,
-) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Repartition ``df`` round-robin to at least the session's default
-    parallelism (or ``min_parts``) — a no-op when it is already that
-    wide, and capped by the compute floor above so tiny frames are not
+    parallelism — a no-op when it is already that wide, and capped by
+    the 64 KiB-per-task compute floor above so tiny frames are not
     shredded into sub-millisecond tasks.  Row-local results are
     unaffected (every downstream operator here is partitioning-
-    agnostic); only stage parallelism changes.
-
-    ``bytes_per_task`` overrides the floor for call sites whose kernel
-    cost per input byte is far from typical (a q-gram + md5 sort over
-    short strings does seconds of work from kilobytes — pass a small
-    value; a cheap projection can pass a large one)."""
-    if min_parts is not None:
-        target = int(min_parts)
-    else:
-        target = int(df.sparkSession.sparkContext.defaultParallelism)
-        est = _estimated_bytes(df)
-        if est is not None:
-            target = min(target, -(-est // int(bytes_per_task or _BYTES_PER_TASK)))
+    agnostic); only stage parallelism changes."""
+    target = int(df.sparkSession.sparkContext.defaultParallelism)
+    est = _estimated_bytes(df)
+    if est is not None:
+        target = min(target, -(-est // _BYTES_PER_TASK))
     if target <= 1:
         return df
     if df.rdd.getNumPartitions() >= target:

@@ -96,20 +96,20 @@ def write_bucketed(
         # both the catalog entry and any orphaned location.  Each
         # qualifier part is quoted separately (`db`.`tbl`), and the
         # location comes from the catalog when the table is known —
-        # never reconstructed for a registered table.
+        # never reconstructed for a registered table.  Asking
+        # ``tableExists`` first keeps a fresh session from logging a
+        # failed DESCRIBE analysis as an ERROR.
         import os
         import shutil
         from urllib.parse import urlparse
 
         quoted = ".".join(f"`{part}`" for part in table.split("."))
         location: Optional[str] = None
-        try:
+        if spark.catalog.tableExists(table):
             for row in spark.sql(f"DESCRIBE TABLE EXTENDED {quoted}").collect():
                 if row.col_name == "Location":
                     location = row.data_type
                     break
-        except Exception:
-            pass  # table unknown to this metastore
         spark.sql(f"DROP TABLE IF EXISTS {quoted}")
         if location is None:
             # Orphaned-directory case: reconstruct the default managed

@@ -26,13 +26,16 @@ Engine deltas (SURVEY.md §3.1/§4.1):
   (``README.md:33-53`` vs ``workflow.py:220``).  Here :class:`Run` routes
   every resource production through :meth:`Workflow.resolve`, so
   persist/reuse/catalog policy is injectable.
-* **fan-out persist policy** — a resource whose pattern has more than one
-  static dependent (known from :meth:`Workflow.deps`) is marked
-  ``persist(MEMORY_AND_DISK)`` when it is a DataFrame, restoring the
-  reference's evaluate-once semantics across Spark actions without
-  persisting everything (which would OOM at 100 TB).  Multi-provide
-  tuples always persist.  Nothing is auto-unpersisted (results are lazy
-  and outlive the run); ``Run.release()`` frees explicitly.
+* **fan-out persist policy** — a single-pattern resource is marked
+  ``persist(MEMORY_AND_DISK)`` when it is consumed a second time within
+  one run (the run's memo cache is the fan-out signal), and every
+  DataFrame slice of a multi-provide tuple is persisted at production
+  (the shared producer ran once).  Both restore the reference's
+  evaluate-once semantics across Spark actions without persisting
+  everything (which would OOM at 100 TB); cheap scans (scan, filter
+  and project only) are exempt in both cases (persisting a scan is a
+  pessimization).  Nothing is auto-unpersisted (results are lazy and
+  outlive the run); ``Run.release()`` frees explicitly.
 * per-cell debug timing kept (``workflow.py:250-257``), noting that for
   DataFrame producers it measures *plan construction*, not execution.
 """
@@ -132,7 +135,6 @@ class Workflow:
         if config:
             self.set_config(config)
         self._validated = False
-        self._fanout_cache: Optional[dict[str, int]] = None
 
     # -- registry -----------------------------------------------------
 
@@ -149,7 +151,6 @@ class Workflow:
 
     def provide(self, *patterns: str, _override: bool = False, **kw) -> Cell:
         self._validated = False
-        self._fanout_cache = None
         if not _override:
             for pattern in patterns:
                 if pattern in self.router:
@@ -163,7 +164,6 @@ class Workflow:
 
     def depend(self, **dependencies: str) -> Callable:
         self._validated = False
-        self._fanout_cache = None
         templates = {k: NameTemplate(v) for k, v in dependencies.items()}
 
         def decorator(fn: Callable) -> Callable:
@@ -264,19 +264,6 @@ class Workflow:
                     f'(validation failed when evaluating "{child}")'
                 )
             self._walk(child, graph, ancestors + (child,))
-
-    def _fanout_counts(self) -> dict[str, int]:
-        """Static dependent-count per pattern — drives the persist
-        policy.  Memoized until the graph changes; graphs with unknown
-        deps simply get no auto-persist (best-effort)."""
-        if self._fanout_cache is None:
-            try:
-                self._fanout_cache = {
-                    p: len(children) for p, children in self.deps().items()
-                }
-            except UnknownDependency:
-                self._fanout_cache = {}
-        return self._fanout_cache
 
     # -- resolution ---------------------------------------------------
 
@@ -407,7 +394,6 @@ class Run:
         )
 
         if len(cell.patterns) == 1:
-            res = self._maybe_persist(match.route, res)
             self.cache[resource_name] = res
             return res
 
@@ -415,13 +401,13 @@ class Run:
         assert isinstance(res, tuple)
         out = []
         for template, element in zip(cell.patterns, res):
-            element = self._maybe_persist(template.pattern, element, multi=True)
+            element = self._persist_slice(element)
             self.cache[template.fmt(match.kw)] = element
             out.append(element)
         raw = [t.pattern for t in cell.patterns]
         return out[raw.index(match.route)]
 
-    def _maybe_persist(self, pattern: str, value: Any, multi: bool = False) -> Any:
+    def _persist_slice(self, value: Any) -> Any:
         """Mark multi-provide DataFrames for caching (their shared
         producer ran once; without persist each slice would recompute
         the common prefix per action).  Single-pattern resources persist
@@ -430,7 +416,7 @@ class Run:
         are exempt (persisting a scan is a pessimization)."""
         if not _is_dataframe(value) or getattr(value, "isStreaming", False):
             return value
-        if multi and not _is_cheap_scan(value):
+        if not _is_cheap_scan(value):
             from pyspark import StorageLevel
 
             value = value.persist(StorageLevel.MEMORY_AND_DISK)

@@ -712,97 +712,6 @@ def candidate_mass_sweep(spark: SparkSession, n: int) -> dict:
     return out
 
 
-def fuzzy_prefix_ab(spark: SparkSession, sf_dir: str) -> dict:
-    """Prefix-filter A/B on the part_name_fuzzy_pairs shape (r11 verdict
-    item 5): the SSJoin prefix filter's value is CLAIMED as 'halves
-    posting volume, quarters candidate mass' — this measures it.  Both
-    arms use the catalog query's exact parameters (t=0.5, q=3, brand
-    blocking, self-dedupe); identical verified-pair recall is a theorem
-    (the filter is exact), so only the volume counters differ."""
-    from interlinked_spark.operators.joins import fuzzy_candidate_stats
-
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    l = p.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("l_name"),
-                 F.col("p_brand").alias("brand"))
-    r = p.select(F.col("p_partkey").alias("r_id"), F.col("p_name").alias("r_name"),
-                 F.col("p_brand").alias("brand"))
-    out = {}
-    for arm, flag in (("prefix_on", True), ("prefix_off", False)):
-        out[arm] = fuzzy_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            threshold=0.5, q=3, extra_on=["brand"], dedupe_self=True,
-            prefix_filter=flag,
-        )
-    on, off = out["prefix_on"], out["prefix_off"]
-    out["posting_ratio"] = round(
-        (on["postings_left"] + on["postings_right"])
-        / max(off["postings_left"] + off["postings_right"], 1), 3)
-    out["candidate_mass_ratio"] = round(
-        on["candidate_mass"] / max(off["candidate_mass"], 1), 3)
-    return out
-
-
-def fuzzy_positional_ab(spark: SparkSession, sf_dir: str) -> dict:
-    """PPJoin positional-filter A/B on the part_name_fuzzy_pairs shape
-    (round 15): on top of the prefix filter, each posting carries its
-    canonical rank + gram-set size and a candidate occurrence survives
-    only if the overlap still reachable from that rank meets the
-    Jaccard-equivalent bound — EXACT (the first common gram always
-    survives for a true pair; unit-pinned), so only the volume counters
-    differ.  Both arms keep the prefix filter on; the measured delta is
-    the positional filter's own cut."""
-    from interlinked_spark.operators.joins import fuzzy_candidate_stats
-
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    l = p.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("l_name"),
-                 F.col("p_brand").alias("brand"))
-    r = p.select(F.col("p_partkey").alias("r_id"), F.col("p_name").alias("r_name"),
-                 F.col("p_brand").alias("brand"))
-    out = {}
-    for arm, flag in (("positional_on", True), ("positional_off", False)):
-        out[arm] = fuzzy_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            threshold=0.5, q=3, extra_on=["brand"], dedupe_self=True,
-            prefix_filter=True, positional_filter=flag,
-        )
-    on, off = out["positional_on"], out["positional_off"]
-    out["candidate_mass_ratio"] = round(
-        on["candidate_mass"] / max(off["candidate_mass"], 1), 3)
-    out["candidate_pairs_ratio"] = round(
-        on["candidate_pairs"] / max(off["candidate_pairs"], 1), 3)
-    return out
-
-
-def edit_prefix_ab(spark: SparkSession, sf_dir: str) -> dict:
-    """Prefix-filter A/B on the part_name_edit_pairs shape (r12 verdict
-    item 2): the Ed-Join t-prefix scheme indexes min(|G|, q*d + t)
-    grams per row instead of every gram.  Both arms use the catalog
-    query's exact parameters (d=2, q=2, t=1, brand blocking,
-    self-dedupe, same_side); recall is identical by the prefix-filter
-    lemma (exact), so only the volume counters differ."""
-    from interlinked_spark.operators.joins import edit_candidate_stats
-
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    l = p.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("l_name"),
-                 F.col("p_brand").alias("brand"))
-    r = p.select(F.col("p_partkey").alias("r_id"), F.col("p_name").alias("r_name"),
-                 F.col("p_brand").alias("brand"))
-    out = {}
-    for arm, flag in (("prefix_on", True), ("prefix_off", False)):
-        out[arm] = edit_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            max_distance=2, q=2, extra_on=["brand"], dedupe_self=True,
-            prefix_filter=flag, same_side=True,
-        )
-    on, off = out["prefix_on"], out["prefix_off"]
-    out["posting_ratio"] = round(
-        (on["postings_left"] + on["postings_right"])
-        / max(off["postings_left"] + off["postings_right"], 1), 3)
-    out["candidate_mass_ratio"] = round(
-        on["candidate_mass"] / max(off["candidate_mass"], 1), 3)
-    return out
-
-
 def _rerank_index(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """One stored IVF-PQ index over the base embeddings (catalog
     geometry: base-subset fit, held-out fifth appended) shared by the
@@ -1099,30 +1008,9 @@ def main() -> None:
             ),
             flush=True,
         )
-    fuzzy_ab = None
-    if not os.environ.get("SPARK_GRAFT_SCALE_SKIP_FUZZY_AB"):
-        fuzzy_ab = fuzzy_prefix_ab(spark, base)
-        print(
-            json.dumps({"fuzzy_prefix_filter_ab": fuzzy_ab}, separators=(",", ":")),
-            flush=True,
-        )
-    edit_ab = None
-    if not os.environ.get("SPARK_GRAFT_SCALE_SKIP_EDIT_AB"):
-        edit_ab = edit_prefix_ab(spark, base)
-        print(
-            json.dumps({"edit_prefix_filter_ab": edit_ab}, separators=(",", ":")),
-            flush=True,
-        )
     ivf_recall = None
     if not os.environ.get("SPARK_GRAFT_SCALE_SKIP_IVF_RECALL"):
         ivf_recall = ivf_neardup_recall_sweep(spark, dirs, ks)
-    pos_ab = None
-    if not os.environ.get("SPARK_GRAFT_SCALE_SKIP_POS_AB"):
-        pos_ab = fuzzy_positional_ab(spark, base)
-        print(
-            json.dumps({"fuzzy_positional_ab": pos_ab}, separators=(",", ":")),
-            flush=True,
-        )
     rerank_c = None
     if not os.environ.get("SPARK_GRAFT_SCALE_SKIP_RERANK_C"):
         rerank_c = ivfpq_rerank_c_sweep(spark, base)
@@ -1146,14 +1034,8 @@ def main() -> None:
             payload["base_sf_dir"] = base
             if mass is not None:
                 payload["decorrelated_candidate_mass"] = mass
-            if fuzzy_ab is not None:
-                payload["fuzzy_prefix_filter_ab"] = fuzzy_ab
-            if edit_ab is not None:
-                payload["edit_prefix_filter_ab"] = edit_ab
             if ivf_recall is not None:
                 payload["ivf_neardup_recall"] = ivf_recall
-            if pos_ab is not None:
-                payload["fuzzy_positional_ab"] = pos_ab
             if rerank_c is not None:
                 payload["ivfpq_rerank_c"] = rerank_c
             if filter_sel is not None:
@@ -1176,14 +1058,8 @@ def main() -> None:
         }
         if mass is not None:
             payload["decorrelated_candidate_mass"] = mass
-        if fuzzy_ab is not None:
-            payload["fuzzy_prefix_filter_ab"] = fuzzy_ab
-        if edit_ab is not None:
-            payload["edit_prefix_filter_ab"] = edit_ab
         if ivf_recall is not None:
             payload["ivf_neardup_recall"] = ivf_recall
-        if pos_ab is not None:
-            payload["fuzzy_positional_ab"] = pos_ab
         if rerank_c is not None:
             payload["ivfpq_rerank_c"] = rerank_c
         if filter_sel is not None:

@@ -132,36 +132,93 @@ def test_advise_skips_non_dataframe():
     assert out.returncode == 0
 
 
-def test_advise_reports_clean_and_warn():
+# Runs each ``advise`` invocation (one JSON argv per command-line
+# argument) through ``cli.main`` in one interpreter, so the example
+# workflows share one JVM.  Each invocation's output is printed between
+# delimiter lines, the closing one carrying its exit code.  Workflows an
+# invocation registered are forgotten afterwards: the CLI re-executes
+# the module, and a named workflow may be registered only once.
+_ADVISE_RUNNER = """
+import json, sys, traceback
+from interlinked_spark.cli import main
+from interlinked_spark.workflow import Workflow
+for raw in sys.argv[1:]:
+    argv = json.loads(raw)
+    before = set(Workflow._registry)
+    print("@@@ BEGIN", raw, flush=True)
+    try:
+        main(argv)
+        code = 0
+    except SystemExit as exc:
+        code = exc.code if isinstance(exc.code, int) else (0 if exc.code is None else 1)
+    except Exception:
+        traceback.print_exc()
+        code = 1
+    for name in set(Workflow._registry) - before:
+        Workflow.forget(name)
+    print("@@@ END", code, flush=True)
+"""
+
+_ADVISE_INVOCATIONS = {
     # a plain scan is clean; the quality filter (all-derived predicate)
-    # legitimately draws the unpushed-filter advisory — warn severity
-    # does NOT fail the exit status (only high does).
-    out = run_cli("examples.llm_pipeline:wkf", "advise", "docs.raw", "docs.clean")
-    assert "docs.raw: no findings" in out.stdout
-    assert "docs.clean: [warn] unpushed-filter" in out.stdout
-    assert out.returncode == 0
+    # legitimately draws the unpushed-filter advisory
+    "clean_and_warn": ["examples.llm_pipeline:wkf", "advise", "docs.raw", "docs.clean"],
+    # every DataFrame resource the user-facing examples expose
+    "analytics": ["examples.analytics:wkf", "advise", "revenue.a", "table.lineitem"],
+    "cdc_pipeline": ["examples.cdc_pipeline:wkf", "advise", "docs.new_matches"],
+    "grouped_models": ["examples.grouped_models:wkf", "advise", "nation_models"],
+    "llm_pipeline": [
+        "examples.llm_pipeline:wkf", "advise",
+        "docs.canonical", "docs.decontaminated", "mix.resampled",
+    ],
+}
 
 
-def test_advise_examples_surface_no_high_findings():
+@pytest.fixture(scope="module")
+def advise_runs():
+    """name -> (exit code, stdout) for every ``_ADVISE_INVOCATIONS``
+    entry, from one subprocess."""
+    import os
+
+    out = subprocess.run(
+        [sys.executable, "-c", _ADVISE_RUNNER,
+         *(json.dumps(argv) for argv in _ADVISE_INVOCATIONS.values())],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        env={**os.environ, "PYTHONPATH": REPO},
+        # Hang guard only, not a performance bound (see
+        # test_example_scripts_run).
+        timeout=960,
+    )
+    runs = {}
+    blocks = out.stdout.split("@@@ BEGIN ")[1:]
+    for name, block in zip(_ADVISE_INVOCATIONS, blocks):
+        body, ended, tail = block.partition("@@@ END ")
+        if ended:
+            runs[name] = (int(tail.split()[0]), body.partition("\n")[2])
+    assert list(runs) == list(_ADVISE_INVOCATIONS), (out.stdout, out.stderr[-2000:])
+    return runs
+
+
+def test_advise_reports_clean_and_warn(advise_runs):
+    # warn severity does NOT fail the exit status (only high does).
+    code, stdout = advise_runs["clean_and_warn"]
+    assert "docs.raw: no findings" in stdout
+    assert "docs.clean: [warn] unpushed-filter" in stdout
+    assert code == 0
+
+
+def test_advise_examples_surface_no_high_findings(advise_runs):
     """Advisor-as-CI over the user-facing example workflows (r9 verdict
     item 6): every DataFrame resource the examples expose passes the
     plan advisor with ZERO high-severity findings — `advise` exits 1 on
     high, so these invocations double as the CI gate a user would wire
     up (README: Plan advisor)."""
-    surface = {
-        "examples.analytics:wkf": ["revenue.a", "table.lineitem"],
-        "examples.cdc_pipeline:wkf": ["docs.new_matches"],
-        "examples.grouped_models:wkf": ["nation_models"],
-        "examples.llm_pipeline:wkf": [
-            "docs.canonical",
-            "docs.decontaminated",
-            "mix.resampled",
-        ],
-    }
-    for source, targets in surface.items():
-        out = run_cli(source, "advise", *targets, timeout=420)
-        assert out.returncode == 0, (source, out.stdout, out.stderr[-500:])
-        assert "[high]" not in out.stdout, (source, out.stdout)
+    for name in ("analytics", "cdc_pipeline", "grouped_models", "llm_pipeline"):
+        code, stdout = advise_runs[name]
+        assert code == 0, (name, stdout)
+        assert "[high]" not in stdout, (name, stdout)
 
 
 def test_catalog_cli_runs_query_and_validates_jvm_free():

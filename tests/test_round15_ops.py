@@ -499,46 +499,6 @@ def test_position_attribution_reference(spark):
     assert all(abs(s - 1.0) < 1e-9 for s in sums.values())
 
 
-def test_positional_filter_is_exact_and_cuts_mass(spark):
-    """PPJoin positional filter (Xiao et al. 2008): the verified pair
-    set is IDENTICAL with the filter on — it prunes only redundant
-    occurrences and hopeless pairs — while raw candidate mass drops."""
-    from interlinked_spark.operators.joins import (
-        fuzzy_candidate_stats,
-        fuzzy_string_join,
-    )
-
-    p = spark.read.parquet(f"{SF}/part.parquet")
-    l = p.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("l_name"),
-                 F.col("p_brand").alias("brand"))
-    r = p.select(F.col("p_partkey").alias("r_id"), F.col("p_name").alias("r_name"),
-                 F.col("p_brand").alias("brand"))
-    pairs = {}
-    stats = {}
-    for flag in (False, True):
-        pairs[flag] = {
-            (x.l_id, x.r_id, x.jaccard)
-            for x in fuzzy_string_join(
-                l, r, "l_name", "r_name", "l_id", "r_id",
-                threshold=0.5, extra_on=["brand"], dedupe_self=True,
-                positional_filter=flag,
-            ).collect()
-        }
-        stats[flag] = fuzzy_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            threshold=0.5, extra_on=["brand"], dedupe_self=True,
-            positional_filter=flag,
-        )
-    assert pairs[True] == pairs[False] and len(pairs[True]) > 0
-    assert stats[True]["candidate_mass"] < stats[False]["candidate_mass"]
-    assert stats[True]["candidate_pairs"] <= stats[False]["candidate_pairs"]
-    with pytest.raises(ValueError, match="positional_filter"):
-        fuzzy_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            prefix_filter=False, positional_filter=True,
-        )
-
-
 def test_quantile_normalize_reference(spark):
     """Hand-checked tie-averaged midpoints: values 1,2,2,3 -> q =
     0.125, 0.5 (both ties), 0.875; symmetric and strictly in (0,1)."""

@@ -226,26 +226,6 @@ def test_quantile_normalize_null_abstain(spark):
     assert out[2.0] == (2, pytest.approx(4 / 6, abs=1e-6))
 
 
-def test_positional_filter_warns_with_hot_gram_cap(spark):
-    """positional_filter + max_qgram_df is allowed but must WARN: the
-    exactness argument needs every prefix posting present."""
-    import warnings
-
-    from interlinked_spark.operators.joins import fuzzy_candidate_stats
-
-    p = spark.read.parquet(f"{SF}/part.parquet").limit(50)
-    l = p.select(F.col("p_partkey").alias("l_id"), F.col("p_name").alias("l_name"))
-    r = p.select(F.col("p_partkey").alias("r_id"), F.col("p_name").alias("r_name"))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        fuzzy_candidate_stats(
-            l, r, "l_name", "r_name", "l_id", "r_id",
-            threshold=0.5, dedupe_self=True,
-            positional_filter=True, max_qgram_df=100,
-        )
-    assert any("max_qgram_df" in str(w.message) for w in caught)
-
-
 # ---------- DDSketch relative-error quantile state ----------
 
 

@@ -80,23 +80,6 @@ def test_spread_caps_tiny_frames_below_parallelism(spark):
     assert out.rdd.getNumPartitions() <= 4
 
 
-def test_spread_explicit_min_parts_still_honored(spark):
-    from interlinked_spark.operators.partitioning import spread
-
-    tiny = spark.read.parquet(f"{SF}/documents.parquet")
-    out = spread(tiny, min_parts=6)
-    assert out.rdd.getNumPartitions() == 6
-
-
-def test_spread_bytes_per_task_widens_expensive_kernels(spark):
-    from interlinked_spark.operators.partitioning import spread
-
-    tiny = spark.read.parquet(f"{SF}/documents.parquet")
-    wide = spread(tiny, bytes_per_task=64)
-    narrow = spread(tiny, bytes_per_task=1 << 30)
-    assert wide.rdd.getNumPartitions() > narrow.rdd.getNumPartitions()
-
-
 def test_spread_results_unchanged(spark):
     from interlinked_spark.operators.partitioning import spread
 
